@@ -44,8 +44,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - PARTITION PRUNING happens at `Scan.build`: the store's physical
   *    layout is `name=<series>/bucket=<bucketStartMs>/...parquet`, and
   *    pushed `name` equality/IN filters plus `timestamp` range bounds
-  *    select only the directories whose (name, [bucket, bucket +
-  *    bucketMs)) can hold matching rows — at 100 TB a dashboard-style
+  *    make the listing descend only into the directories whose (name,
+  *    [bucket, bucket + bucketMs)) can hold matching rows
+  *    ([[GraftSource.listFiles]]) — at 100 TB a dashboard-style
   *    "one series, last 6h" query opens a handful of files no matter
   *    how large the store is, exactly the reference's time/series
   *    pruning (`indexer.rs` stream probe + per-bucket layout).
@@ -221,11 +222,17 @@ object GraftSource {
     sb.result()
   }
 
-  /** List every visible data file under `rootDir`(/data) with its
-    * (name, bucket) coordinates. Accepts either the GraftDb root (data
-    * lives in `<root>/data`) or a data dir directly.
+  /** List the visible data files under `rootDir`(/data) whose (name,
+    * bucket) dirs `b` admits ([[admits]]), with their coordinates.
+    * Accepts either the GraftDb root (data lives in `<root>/data`) or a
+    * data dir directly. Only admitted `name=` dirs (compared unescaped)
+    * are listed for buckets and only admitted `bucket=` dirs for files,
+    * so a one-series window costs one listing per name plus one per
+    * overlapping bucket, however large the store; the result equals
+    * `prune` over the whole listing.
     */
-  private[graft] def listFiles(rootDir: String, conf: Configuration): Seq[GraftFile] = {
+  private[graft] def listFiles(rootDir: String, conf: Configuration,
+      bucketMs: Long, b: Bounds): Seq[GraftFile] = {
     val root = new Path(rootDir)
     val fs = root.getFileSystem(conf)
     val dataDir = {
@@ -241,6 +248,7 @@ object GraftSource {
       nameDir <- fs.listStatus(dataDir).toSeq
       if nameDir.isDirectory && nameDir.getPath.getName.startsWith("name=")
       name = unescapePathName(nameDir.getPath.getName.stripPrefix("name="))
+      if b.names.forall(_.contains(name))
       bucketDir <- fs.listStatus(nameDir.getPath).toSeq
       if bucketDir.isDirectory && bucketDir.getPath.getName.startsWith("bucket=")
       bucket = {
@@ -251,6 +259,7 @@ object GraftSource {
         raw.toLongOption.getOrElse(throw new IllegalStateException(
           s"unparsable bucket partition dir: ${bucketDir.getPath}"))
       }
+      if admits(b, name, bucket, bucketMs)
       f <- fs.listStatus(bucketDir.getPath).toSeq
       if f.isFile && visible(f) && f.getLen > 0
     } yield GraftFile(f.getPath.toString, name, bucket, f.getLen)
@@ -265,14 +274,21 @@ object GraftSource {
   private[graft] def prune(files: Seq[GraftFile], filters: Seq[Filter],
       bucketMs: Long): Seq[GraftFile] = {
     val b = bounds(filters)
-    files.filter { f =>
-      // saturating end keeps a file whose bucket arithmetic would
-      // overflow instead of mis-pruning it
-      val bucketEnd =
-        if (f.bucket > Long.MaxValue - bucketMs) Long.MaxValue
-        else f.bucket + bucketMs
-      b.names.forall(_.contains(f.name)) && f.bucket <= b.hi && bucketEnd > b.lo
-    }
+    files.filter(f => admits(b, f.name, f.bucket, bucketMs))
+  }
+
+  /** Whether `b` admits the (name, [bucket, bucket + bucketMs)) dir:
+    * the name is in the name set (if any) and the bucket interval
+    * overlaps [lo, hi].
+    */
+  private def admits(b: Bounds, name: String, bucket: Long,
+      bucketMs: Long): Boolean = {
+    // saturating end keeps a bucket whose arithmetic would overflow
+    // instead of mis-pruning it
+    val bucketEnd =
+      if (bucket > Long.MaxValue - bucketMs) Long.MaxValue
+      else bucket + bucketMs
+    b.names.forall(_.contains(name)) && bucket <= b.hi && bucketEnd > b.lo
   }
 
   /** The (name set, inclusive timestamp bounds) a filter conjunction
@@ -281,6 +297,11 @@ object GraftSource {
     */
   private[graft] final case class Bounds(names: Option[Set[String]],
       lo: Long, hi: Long)
+
+  private[graft] object Bounds {
+    /** No constraint: every name, every timestamp. */
+    val All: Bounds = Bounds(None, Long.MinValue, Long.MaxValue)
+  }
 
   private[graft] def bounds(filters: Seq[Filter]): Bounds = {
     var names: Option[Set[String]] = None
@@ -640,7 +661,7 @@ private[sources] class GraftScanBuilder(rootDir: String, bucketMs: Long,
     if (labelEq.isEmpty) None
     else GraftSource.labelNames(rootDir, conf.value, labelEq)
 
-  /** Restrict pushed bounds / a file list to the label-selected names. */
+  /** Restrict pushed bounds to the label-selected names. */
   private def withLabels(b: GraftSource.Bounds,
       ls: Option[Set[String]]): GraftSource.Bounds = ls match {
     case Some(s) => b.copy(names = Some(b.names.fold(s)(_ intersect s)))
@@ -657,9 +678,7 @@ private[sources] class GraftScanBuilder(rootDir: String, bucketMs: Long,
       // aligned path never even lists the data dirs
       val boundary =
         if (covLo <= b.lo && b.hi <= covHi) Nil
-        else GraftSource.prune(
-            GraftSource.listFiles(rootDir, conf.value), pushed.toSeq, bucketMs)
-          .filter(f => b.names.forall(_.contains(f.name)))
+        else GraftSource.listFiles(rootDir, conf.value, bucketMs, b)
           .filterNot { f =>
             val bucketLast =
               if (f.bucket > Long.MaxValue - bucketMs) Long.MaxValue
@@ -670,14 +689,13 @@ private[sources] class GraftScanBuilder(rootDir: String, bucketMs: Long,
         boundary, aggGroup, aggFuncs, b, covLo, covHi, bucketMs,
         pushed, conf)
     } else {
-      val files = GraftSource.prune(
-          GraftSource.listFiles(rootDir, conf.value), pushed.toSeq, bucketMs)
-        .filter(f => ls.forall(_.contains(f.name)))
+      val pushedBounds = GraftSource.bounds(pushed.toSeq)
+      val files = GraftSource.listFiles(rootDir, conf.value, bucketMs,
+        withLabels(pushedBounds, ls))
       // claimed timestamp bounds must be enforced row-level by the
       // reader; in default mode everything is residual and the bounds
       // passed are the full range (no-op)
-      val b = if (statsMode) GraftSource.bounds(pushed.toSeq)
-        else GraftSource.Bounds(None, Long.MinValue, Long.MaxValue)
+      val b = if (statsMode) pushedBounds else GraftSource.Bounds.All
       // a big compacted file must not become one straggler task, and
       // small flush files must not become one task each: split/bin at
       // Spark's own target size — files.maxPartitionBytes capped down

@@ -23,10 +23,13 @@ import Expr.Matcher
   *
   * Physical layout: one Parquet dataset partitioned by (`name`,
   * `bucket`) where bucket = timestamp div bucketMs — the analogue of the
-  * reference's per-stream time-partitioned files (§1.3); Spark partition
-  * pruning replaces its SQLite `id_to_file` index, and Parquet row-group
-  * stats replace the `.ty` header min/max. The catalog is a JSON-lines
-  * sidecar (replacing indexer.sqlite).
+  * reference's per-stream time-partitioned files (§1.3). Queries read it
+  * through the DSv2 `graft` format ([[dataset]]), whose scan turns each
+  * selector's pushed name set and timestamp bounds into a listing of
+  * only the matching `name=`/`bucket=` dirs — the role of the
+  * reference's SQLite `id_to_file(id, start, end)` probe. Parquet
+  * row-group stats replace the `.ty` header min/max. The catalog is a
+  * JSON-lines sidecar (replacing indexer.sqlite).
   */
 final class GraftDb(
     val spark: SparkSession,
@@ -933,18 +936,19 @@ final class GraftDb(
 
   // ---- query ----
 
-  private def dataset(): DataFrame = {
-    // an existing-but-partitionless data dir (every stream deleted /
-    // expired) must read as empty, not fail schema inference
-    val p = Paths.get(dataDir)
-    val hasData = Files.exists(p) && {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.list(p))(_.iterator().asScala
-        .exists(_.getFileName.toString.startsWith("name=")))
-    }
-    if (hasData) spark.read.parquet(dataDir).drop("bucket")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dataSchema)
-  }
+  /** The store as the five-column table (name, labels, timestamp,
+    * value, lvalue), read through the DSv2 `graft` format
+    * ([[graft.sources.GraftSource]]): a fixed schema (no inference), and
+    * the `name =`/`IN` and `timestamp` bounds every engine scan carries
+    * are pushed into `Scan.build`, which lists only the `name=` dirs
+    * and `bucket=` dirs they admit. The listing runs per query
+    * execution, so a flush, compact, expire or delete is visible to the
+    * next query with nothing to invalidate; a missing or partitionless
+    * data dir lists as empty.
+    */
+  private def dataset(): DataFrame =
+    spark.read.format("graft").option("bucketMs", bucketMs.toString)
+      .load(rootDir).drop("bucket")
 
   /** Engine over the store. `serveFromStats = true` additionally hands
     * the engine the stats sidecar, so eligible `*_over_time` range

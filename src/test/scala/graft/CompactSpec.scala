@@ -172,6 +172,47 @@ class CompactSpec extends AnyFunSuite {
     assert(db.fastAggregate("m", 0, 10 * hour - 1).head().getAs[Double]("value_sum") == 2.0)
   }
 
+  test("every write and maintenance step is visible to the next query, on two instances") {
+    val root = Files.createTempDirectory("graft_fresh").toString
+    val H = 3600 * 1000L
+    val db = new GraftDb(spark, root)
+    val other = new GraftDb(spark, root)
+    db.createStream("m{k=\"a\"}", VType.U64)
+    db.createStream("m{k=\"b\"}", VType.U64)
+    def seen(): Seq[Seq[(Long, Long)]] = Seq(db, other).map(
+      _.query("m", 0, 10 * H).output.collect().toSeq
+        .map(r => r.getLong(0) -> r.getLong(1)).sorted)
+    def expectSeen(want: (Long, Long)*): Unit =
+      assert(seen() == Seq.fill(2)(want.sorted), s"want $want")
+    def flush(sel: String, pts: (Long, Long)*): Unit = {
+      val ins = db.inserter(sel)
+      pts.foreach { case (t, v) => ins.insert(t, v) }
+      ins.flush()
+    }
+    // no data dir yet: reads empty
+    assert(!Files.exists(Paths.get(root, "data")))
+    expectSeen()
+    flush("m{k=\"a\"}", 0L -> 1L, 1000L -> 2L, H + 5L -> 3L)
+    expectSeen(0L -> 1L, 1000L -> 2L, H + 5L -> 3L)
+    flush("m{k=\"a\"}", 2000L -> 4L)
+    flush("m{k=\"b\"}", 3000L -> 10L, H + 10L -> 20L)
+    val all = Seq(0L -> 1L, 1000L -> 2L, 2000L -> 4L, 3000L -> 10L,
+      H + 5L -> 3L, H + 10L -> 20L)
+    expectSeen(all: _*)
+    assert(db.compact(1) == 2L) // bucket 0 holds 3 files, bucket 1 holds 2
+    expectSeen(all: _*)
+    assert(db.expire(H) == 1L) // bucket 0, shared by both streams
+    expectSeen(H + 5L -> 3L, H + 10L -> 20L)
+    db.deleteStream("m{k=\"b\"}", rewrite = true)
+    expectSeen(H + 5L -> 3L)
+    // every partition expired: a data dir with no name= dir reads empty
+    assert(db.expire(10 * H) == 1L)
+    assert(Files.exists(Paths.get(root, "data")) &&
+      scala.util.Using.resource(Files.list(Paths.get(root, "data")))(
+        !_.iterator().asScala.exists(_.getFileName.toString.startsWith("name="))))
+    expectSeen()
+  }
+
   test("pre-journal orphan hidden file is discarded, data intact") {
     val (db, part, before) = setup()
     Files.writeString(part.resolve(".compact-7.parquet"), "not a real parquet")

@@ -593,7 +593,7 @@ class GraftSourceSpec extends AnyFunSuite {
       .write.option("parquet.block.size", (64 * 1024).toString)
       .partitionBy("name", "bucket").parquet(s"$dir/data")
     val files = GraftSource.listFiles(dir,
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.conf.Configuration(), H, GraftSource.Bounds.All)
     assert(files.size == 1 && files.head.length > 256 * 1024, files)
     // direct: a small split size yields several partitions whose union
     // is exactly the file (count fast path + row reads both exercised)

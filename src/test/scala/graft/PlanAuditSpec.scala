@@ -540,6 +540,26 @@ class PlanAuditSpec extends AnyFunSuite {
       "a per-row regex on the name column crept into the scan")
   }
 
+  test("GraftDb.query plans a pruned GraftScan: a 1 h window opens only its buckets") {
+    val H = 3600 * 1000L
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_db").toString
+    val db = new graft.tsdb.GraftDb(spark, root)
+    // 2 names x 24 hourly buckets, one flush each: one file per bucket
+    Seq("m_a", "m_b").foreach { m =>
+      db.createStream(m, graft.tsdb.VType.F64)
+      val ins = db.inserter(m)
+      (0L until 24 * 4).foreach(i => ins.insert(i * 15 * 60 * 1000L, i.toDouble))
+      ins.flush()
+    }
+    val (lo, hi) = (5 * H + 30 * 60 * 1000L, 6 * H + 30 * 60 * 1000L)
+    val n = (0L until 24L).count(b => b * H <= hi && (b + 1) * H > lo)
+    val out = db.query("m_a", lo, hi).output
+    val p = plan(out)
+    assert(p.contains(s"GraftScan files=$n "), p)
+    assert(!p.contains("InMemoryFileIndex"), p)
+    assert(out.count() == 5L) // 5:30, 5:45, 6:00, 6:15, 6:30
+  }
+
   test("pp03 mixing rank never windows the data by source") {
     val p = plan(graft.queries.Pipeline.queries("pp03_domain_mix")(spark, sf))
     // the per-source selection rank must come from groupedCumSum (data

@@ -17,8 +17,8 @@ class PropertySpec extends AnyFunSuite {
   /** Deterministic sampler (no scalatestplus bridge in the offline
     * dependency cache): n seeded samples per property.
     */
-  private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
+  private def samples[A](g: Gen[A], n: Int, seed: Long = 42L): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   // ---- coercion lattice (lib.rs:63-73): pure, exhaustive ----
 
@@ -631,15 +631,13 @@ class PropertySpec extends AnyFunSuite {
 
   // ---- DSv2 directory pruning: completeness under random filters ----
 
-  private val pruneCase: Gen[(Seq[graft.sources.GraftSource.GraftFile],
-      Seq[org.apache.spark.sql.sources.Filter], Long)] = {
+  /** A pushed-filter shape [[graft.sources.GraftSource.prune]] acts on
+    * (or ignores), over names from `nameGen` and 100 ms buckets 0..9.
+    */
+  private def pruneFilterGen(
+      nameGen: Gen[String]): Gen[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.sources._
-    val nameGen = Gen.oneOf("a", "b", "c")
-    val w = 100L
-    val fileGen = for {
-      n <- nameGen; b <- Gen.choose(0L, 9L)
-    } yield graft.sources.GraftSource.GraftFile(s"/$n/$b", n, b * w, 1L)
-    val filterGen: Gen[Filter] = Gen.oneOf(
+    Gen.oneOf(
       nameGen.map(EqualTo("name", _)),
       Gen.listOfN(2, nameGen).map(ns => In("name", ns.toArray[Any])),
       Gen.choose(-50L, 1050L).map(GreaterThan("timestamp", _)),
@@ -648,9 +646,18 @@ class PropertySpec extends AnyFunSuite {
       Gen.choose(-50L, 1050L).map(LessThanOrEqual("timestamp", _)),
       Gen.choose(-50L, 1050L).map(EqualTo("timestamp", _)),
       Gen.const(IsNotNull("timestamp")))
+  }
+
+  private val pruneCase: Gen[(Seq[graft.sources.GraftSource.GraftFile],
+      Seq[org.apache.spark.sql.sources.Filter], Long)] = {
+    val nameGen = Gen.oneOf("a", "b", "c")
+    val w = 100L
+    val fileGen = for {
+      n <- nameGen; b <- Gen.choose(0L, 9L)
+    } yield graft.sources.GraftSource.GraftFile(s"/$n/$b", n, b * w, 1L)
     for {
       files <- Gen.listOfN(12, fileGen)
-      filters <- Gen.listOfN(3, filterGen)
+      filters <- Gen.listOfN(3, pruneFilterGen(nameGen))
     } yield (files.distinct, filters, w)
   }
 
@@ -679,6 +686,113 @@ class PropertySpec extends AnyFunSuite {
       // sanity: prune only ever drops, never invents
       assert(kept.subsetOf(files.toSet))
     }
+  }
+
+  test("DSv2 bound-pruned listing equals prune over the whole listing") {
+    import graft.sources.GraftSource
+    val w = 100L
+    // stream names whose partition dirs carry %XX escapes
+    val names = Seq("a" -> "a", "a/b" -> "a%2Fb", "c=d" -> "c%3Dd",
+      "50%" -> "50%25")
+    val root = java.nio.file.Files.createTempDirectory("graft_list")
+    for (((_, dir), i) <- names.zipWithIndex; b <- 0L until 10L
+         if (b + i) % 3 != 0) {
+      val d = root.resolve(s"data/name=$dir/bucket=${b * w}")
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.write(d.resolve("part-0.parquet"), Array[Byte](1))
+    }
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val all = GraftSource.listFiles(root.toString, conf, w,
+      GraftSource.Bounds.All)
+    assert(all.map(_.name).toSet == names.map(_._1).toSet)
+    val filterGen = pruneFilterGen(Gen.oneOf(names.map(_._1) :+ "zz"))
+    samples(Gen.listOfN(3, filterGen), 300).foreach { filters =>
+      val listed = GraftSource.listFiles(root.toString, conf, w,
+        GraftSource.bounds(filters))
+      assert(listed.toSet == GraftSource.prune(all, filters, w).toSet,
+        s"filters $filters")
+    }
+  }
+
+  // ---- GraftDb's graft-format read ≡ the whole-store parquet read ----
+
+  /** (selector, modifier): the modifier goes after any range brackets. */
+  private val selectorGen: Gen[(String, String)] = for {
+    name <- Gen.oneOf("m_a", "m_b", "m_c")
+    m <- Gen.oneOf("", "{host=\"x\"}", "{host!=\"x\"}",
+      "{host=~\"x|y\"}", "{host=~\"y\"}")
+    mod <- Gen.frequency(3 -> "", 1 -> " offset 1s", 1 -> " offset 2500ms",
+      1 -> " @ 4", 1 -> " @ 6 offset 1s")
+  } yield (name + m, mod)
+
+  /** Query shapes over a (selector, modifier) pair. */
+  private val shapes: Seq[(String, String) => String] = Seq(
+    (s, mod) => s + mod,
+    (s, mod) => s"sum($s$mod)",
+    (s, mod) => s"count($s$mod)",
+    (s, mod) => s"sum by (host) ($s$mod)",
+    (s, mod) => s"rate($s[2s]$mod)",
+    (s, mod) => s"sum_over_time($s[1500ms]$mod)",
+    (s, mod) => s"max_over_time(rate($s[2s]$mod)[4s:1s])")
+
+  private val queryGen: Gen[String] = for {
+    sm <- selectorGen
+    shape <- Gen.oneOf(shapes)
+  } yield shape(sm._1, sm._2)
+
+  /** Window edges on, just before and just after 1 s bucket edges. */
+  private val windowGen: Gen[(Long, Long)] = for {
+    start <- Gen.oneOf(0L, 1000L, 2999L, 3000L, 3001L, 5500L)
+    len <- Gen.oneOf(999L, 1000L, 3000L, 5001L, 7000L, 9000L)
+  } yield (start, start + len)
+
+  test("GraftDb answers equal a TsdbEngine over the whole-store parquet read") {
+    // 1 s buckets: three names (f64 with two `host` values, u64, i64),
+    // 48 counter samples each over 0..11.75 s, flushed in two batches so
+    // one bucket per stream holds two files
+    val db = new graft.tsdb.GraftDb(spark,
+      java.nio.file.Files.createTempDirectory("graft_equiv").toString,
+      bucketMs = 1000L)
+    Seq("m_a{host=\"x\"}" -> VType.F64, "m_a{host=\"y\"}" -> VType.F64,
+        "m_b{host=\"x\"}" -> VType.U64, "m_c{host=\"y\"}" -> VType.I64)
+      .zipWithIndex.foreach { case ((sel, vt), k) =>
+        db.createStream(sel, vt)
+        val ins = db.inserter(sel)
+        (0L until 48L).foreach { i =>
+          ins.insert(i * 250L, i * (k + 1) + (i % 3))
+          if (i == 29L) ins.flush()
+        }
+        ins.flush()
+      }
+    val whole = new TsdbEngine(spark,
+      spark.read.parquet(db.dataPath).drop("bucket"),
+      new StreamCatalog(db.streams()))
+    def answer(r: => graft.tsdb.TsdbResult)
+        : Either[String, (Boolean, Boolean, Seq[String])] =
+      scala.util.Try { val res = r
+        (res.isScalar, res.grouped,
+          res.output.collect().map(_.toString).sorted.toSeq)
+      }.toEither.left.map(_.getClass.getName)
+    val instant = samples(queryGen.flatMap(q => windowGen.map(q -> _)), 16)
+      .map { case (q, (lo, hi)) =>
+        val got = answer(db.query(q, lo, hi))
+        assert(got == answer(whole.query(q, lo, hi)), s"$q over [$lo, $hi]")
+        got
+      }
+    val ranged = samples(for {
+      sm <- selectorGen
+      f <- Gen.oneOf("rate", "sum_over_time")
+      w <- windowGen
+    } yield (s"$f(${sm._1}[2s]${sm._2})", w), 6, seed = 7L)
+      .map { case (q, (lo, hi)) =>
+        val got = answer(db.queryRange(q, lo, hi, 1000L))
+        assert(got == answer(whole.queryRange(q, lo, hi, 1000L)),
+          s"range $q over [$lo, $hi]")
+        got
+      }
+    // the property is vacuous unless most cases answer non-empty
+    val answered = (instant ++ ranged).count(_.exists(_._3.nonEmpty))
+    assert(answered >= 14, s"only $answered of 22 cases answered rows")
   }
 
   test("shuffleOrder equals the window row_number over the same hash") {
