@@ -589,7 +589,7 @@ object TimeSeries {
     // the inner ratio evaluated every 12h becomes a derived series,
     // and the outer max_over_time windows it tumbling per 3 days
     // ("worst 12h-sampled daily purchase/click rate ratio per 3-day
-    // window"). Shares ts57's machinery through the one slidingEval.
+    // window"). Shares ts57's machinery through the one sliding evaluator.
     "ts58_subquery_binary" ->
       q("max_over_time((rate(purchase[1d]) / rate(click[1d]))[3d:12h])",
         roundTo = 6, dedup = true) _,

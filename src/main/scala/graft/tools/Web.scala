@@ -369,9 +369,9 @@ object Web {
       canonical: Boolean, rows: Array[Row])
 
   /** The ONE definition of "an already-windowed inner the sliding
-    * evaluators accept": a range function over a matrix selector or a
-    * subquery. Every promEval dispatch arm matches through this — a
-    * new admitted child shape lands here once, not at five sites.
+    * evaluator accepts": a range function over a matrix selector or a
+    * subquery. The aggregate-child rule and the within-group topk arm
+    * both match through this.
     */
   private object SlidingShape {
     def unapply(e: Expr): Option[Expr.RangeFn] = e match {
@@ -381,44 +381,44 @@ object Web {
     }
   }
 
-  /** Dispatch a Prometheus-API query over the sliding evaluator.
-    * Shape mapping, documented where it deviates:
+  /** Route a Prometheus-API query to the engine's one sliding evaluator
+    * ([[graft.tsdb.TsdbEngine.queryRange]] / `queryRangeBy`), which
+    * evaluates the tree as parsed. Shape mapping, documented where it
+    * deviates:
     *
     *  - `rate(m[5m])` and the other sliding shapes (instant math /
     *    binary and set composition) evaluate as-is — one unlabeled
     *    series.
-    *  - `sum by (u) (rate(m[5m]))` → the grouped sliding evaluation:
-    *    the inner range fn runs per label group over the group's
-    *    POOLED samples (this engine's grouping convention — a group IS
-    *    one series). Over that single-series group the aggregation
-    *    family answers exactly as Prometheus does for a one-series
-    *    group: sum/avg/min/max/quantile are the identity, count is 1,
-    *    stddev/stdvar are 0.
+    *  - aggregate-carrying trees (`sum by (u) (rate(m[5m]))`, `sum(m)`,
+    *    `sum by (s) (err) / sum by (s) (req)`) go to the engine whole:
+    *    `queryRangeBy` under the tree's grouping, `queryRange` when it
+    *    has none. The engine's sliding Aggregate arm evaluates each
+    *    group over its POOLED samples (this engine's grouping
+    *    convention — a group IS one series), so over an already-
+    *    windowed inner the aggregation family answers exactly as
+    *    Prometheus does for a one-series group: sum/avg/min/max/
+    *    quantile are the identity, count is 1, stddev/stdvar are 0; over
+    *    a bare selector it is the per-step window statistic
+    *    (sum/avg/min/max/count/stddev/stdvar/quantile _over_time of the
+    *    group's samples in each step window).
     *  - a bare selector `m` → last sample per step within a step-sized
     *    lookback (`last_over_time(m[step])` — Prometheus' staleness
     *    lookback, with the window tied to the step instead of 5m).
-    *  - `sum by (u) (m)` → the per-step window statistic per group
-    *    (sum/avg/min/max/count/stddev/stdvar/quantile _over_time of
-    *    the group's samples in each step window).
     *  - `without` grouping emits the engine's canonical label-set
     *    column; the serializer decodes it back to metric fields.
     *  - `topk(k, <grouped aggregate>)` / bottomk → the k best groups
     *    AT EACH STEP by value (a step-partitioned rank over the
     *    step-count × group-count frame — bounded, never a global
-    *    sort). k must be a literal.
+    *    sort).
+    *
+    * The bridge accepts less than the engine: one validation walk
+    * (`aggGrouping`), run before evaluation, keeps its narrower rules
+    * as 400s.
     */
   private def promEval(db: GraftDb, ast: Expr, startMs: Long,
       endMs: Long, stepMs: Long): PromMatrix = {
     import graft.tsdb.Expr._
     val e = db.engine()
-    // both mappings live on the ENGINE now (TsdbEngine.windowedAgg /
-    // pooledAggPost — round 13 lifted them from here so the engine's
-    // sliding Aggregate arms and this bridge agree by construction);
-    // these are thin aliases keeping the dispatch below readable
-    def windowed(kind: AggKind): (RangeFnKind, List[Double]) =
-      graft.tsdb.TsdbEngine.windowedAgg(kind)
-    def pooledIdentity(kind: AggKind)(df: DataFrame): DataFrame =
-      graft.tsdb.TsdbEngine.pooledAggPost(kind)(df)
     def groupCols(g: Grouping): Seq[String] =
       if (g.by) g.labels else Seq("labels")
     def grouped(g: Grouping, inner: Expr,
@@ -428,129 +428,81 @@ object Web {
       PromMatrix(cols, canonical = !g.by, df.orderBy(
         (cols :+ "timestamp").map(col): _*).collect())
     }
-    def ungrouped(inner: Expr,
-        post: DataFrame => DataFrame = identity): PromMatrix =
+    def ungrouped(inner: Expr): PromMatrix =
       PromMatrix(Nil, canonical = false,
-        post(e.queryRange(inner, startMs, endMs, stepMs).output)
+        e.queryRange(inner, startMs, endMs, stepMs).output
           .orderBy("timestamp").collect())
-    // the grouped/ungrouped evaluation of one Aggregate node
-    def aggregate(kind: AggKind, child: Expr, g: Option[Grouping],
-        post: DataFrame => DataFrame = identity): PromMatrix =
-      (child, g) match {
-        case (SlidingShape(rf), Some(gr)) =>
-          grouped(gr, rf, df => post(pooledIdentity(kind)(df)))
-        case (sel: Selector, Some(gr)) =>
-          val (k, args) = windowed(kind)
-          grouped(gr, RangeFn(k, MatrixSelector(sel, stepMs), args), post)
-        // the UNGROUPED dashboard staples — `sum(rate(m[5m]))` over
-        // the one pooled series, `sum(m)` the per-step window
-        // statistic; both must work, not 400 with an engine error
-        case (SlidingShape(rf), None) =>
-          ungrouped(rf, df => post(pooledIdentity(kind)(df)))
-        case (sel: Selector, None) =>
-          val (k, args) = windowed(kind)
-          ungrouped(RangeFn(k, MatrixSelector(sel, stepMs), args), post)
-        case (other, _) => throw new IllegalArgumentException(
+    // the aggregate-child shape rule: the bridge aggregates a selector
+    // (the per-step window statistic) or an already-windowed inner (one
+    // pooled series). Inside a composition only the kinds whose
+    // one-series answer is the identity ride: count→1 / stddev→0 are
+    // constants, and reject with guidance
+    def checkAgg(kind: AggKind, child: Expr, composed: Boolean): Unit =
+      child match {
+        case SlidingShape(_) => if (composed) kind match {
+          case AggSum | AggAvg | AggMin | AggMax => ()
+          case AggQuantile(phi) =>
+            require(phi >= 0 && phi <= 1, s"quantile φ out of [0, 1]: $phi")
+          case other => throw new IllegalArgumentException(
+            s"$other over an already-windowed inner cannot compose " +
+              "inside binary/set expressions over the API bridge (its " +
+              "one-pooled-series answer is a constant — query it " +
+              "standalone)")
+        }
+        case _: Selector => graft.tsdb.TsdbEngine.windowedAgg(kind); ()
+        case other => throw new IllegalArgumentException(
           s"the API bridge aggregates a selector or a range function " +
             s"over a matrix selector, got: $other")
       }
-    // one grouped aggregate's INNER as an expression the grouped
-    // sliding evaluator can compose: selectors get their _over_time
-    // mapping; already-windowed inners are the pooled-series identity
-    // for sum/avg/min/max/quantile — kinds whose one-series answer is
-    // a TRANSFORM (count→1, stddev→0) cannot ride inside a composed
-    // tree and reject with guidance
-    def bridgeInner(kind: AggKind, child: Expr): Expr = child match {
-      case SlidingShape(rf) => kind match {
-        case AggSum | AggAvg | AggMin | AggMax => rf
-        case AggQuantile(phi) =>
-          require(phi >= 0 && phi <= 1, s"quantile φ out of [0, 1]: $phi")
-          rf
-        case other => throw new IllegalArgumentException(
-          s"$other over an already-windowed inner cannot compose " +
-            "inside binary/set expressions over the API bridge (its " +
-            "one-pooled-series answer is a constant — query it " +
-            "standalone)")
-      }
-      case sel: Selector =>
-        val (k, args) = windowed(kind)
-        RangeFn(k, MatrixSelector(sel, stepMs), args)
-      case other => throw new IllegalArgumentException(
-        s"the API bridge aggregates a selector or a range function " +
-          s"over a matrix selector, got: $other")
-    }
-    // map a COMPOSED aggregate tree — binary/set/instant math over
-    // aggregates, grouped OR ungrouped, literals welcome — into
-    // (grouping, inner expr) for ONE sliding evaluation: the ratio
-    // panels `sum by (s) (err) / sum by (s) (req)` AND the ungrouped
-    // staple `sum(rate(err[5m])) / sum(rate(req[5m]))`, the masking
-    // idiom `sum by (s) (m) unless (count by (s) (m) > 1)`. None = no
-    // aggregate anywhere in the tree (the plain sliding paths own it).
-    // An aggregate-free side (literals always; any sliding shape when
-    // the evaluation is UNGROUPED) rides along raw; grouped × raw
-    // rejects — no shared key in the pooled-series model.
-    def composedTree(e: Expr): Option[(Option[Grouping], Expr)] = e match {
-      case Aggregate(k, c, g) => Some((g, bridgeInner(k, c)))
-      case BinaryOp(kind, l, r, None) =>
-        def mixed(other: Expr): Nothing = throw new IllegalArgumentException(
-          s"grouped and ungrouped operands cannot compose over the " +
-            s"API bridge (no shared key in the pooled-series model): " +
-            s"$other")
-        // grouping equality is order-INsensitive: `sum by (a,b) (x) /
-        // sum by (b,a) (y)` is one grouping — the engine joins group
-        // columns by NAME, so label order never matters (ADVICE r12)
-        def same(a: Option[Grouping], b: Option[Grouping]): Boolean =
-          (a, b) match {
-            case (Some(x), Some(y)) =>
-              x.by == y.by && x.labels.toSet == y.labels.toSet
-            case (x, y) => x == y
+    // the validation walk over an aggregate-carrying tree: Some(grouping)
+    // when an aggregate sits at the tree's composition level — a root
+    // aggregate, or binary/set/instant math over aggregates, literals
+    // welcome (the ratio panel `sum by (s) (err) / sum by (s) (req)`,
+    // the masking idiom `sum by (s) (m) unless (count by (s) (m) > 1)`);
+    // None when none does (the plain sliding paths own it). An
+    // aggregate-free side (literals always; any sliding shape beside an
+    // UNGROUPED aggregate) rides along raw; grouped × raw rejects — the
+    // raw side has no group key in the pooled-series model (the engine
+    // would evaluate it per group, which Prometheus' label matching
+    // does not)
+    def aggGrouping(e: Expr, composed: Boolean): Option[Option[Grouping]] =
+      e match {
+        case Aggregate(k, c, g) => checkAgg(k, c, composed); Some(g)
+        case BinaryOp(_, l, r, None) =>
+          def mixed(other: Expr): Nothing = throw new IllegalArgumentException(
+            s"grouped and ungrouped operands cannot compose over the " +
+              s"API bridge (no shared key in the pooled-series model): " +
+              s"$other")
+          // grouping equality is order-INsensitive: `sum by (a,b) (x) /
+          // sum by (b,a) (y)` is one grouping — the engine joins group
+          // columns by NAME, so label order never matters (ADVICE r12)
+          def same(a: Option[Grouping], b: Option[Grouping]): Boolean =
+            (a, b) match {
+              case (Some(x), Some(y)) =>
+                x.by == y.by && x.labels.toSet == y.labels.toSet
+              case (x, y) => x == y
+            }
+          (aggGrouping(l, composed = true),
+              aggGrouping(r, composed = true)) match {
+            case (Some(gl), Some(gr)) =>
+              require(same(gl, gr), "grouped operands must share the same " +
+                s"grouping over the API bridge: $gl vs $gr")
+              Some(gl)
+            case (Some(g), None) =>
+              if (g.isEmpty || r.isInstanceOf[NumberLit]) Some(g) else mixed(r)
+            case (None, Some(g)) =>
+              if (g.isEmpty || l.isInstanceOf[NumberLit]) Some(g) else mixed(l)
+            case (None, None) => None
           }
-        (composedTree(l), composedTree(r)) match {
-          case (Some((gl, le)), Some((gr, re))) =>
-            require(same(gl, gr), "grouped operands must share the same " +
-              s"grouping over the API bridge: $gl vs $gr")
-            Some((gl, BinaryOp(kind, le, re)))
-          case (Some((g, le)), None) =>
-            if (g.isEmpty || r.isInstanceOf[NumberLit])
-              Some((g, BinaryOp(kind, le, r)))
-            else mixed(r)
-          case (None, Some((g, re))) =>
-            if (g.isEmpty || l.isInstanceOf[NumberLit])
-              Some((g, BinaryOp(kind, l, re)))
-            else mixed(l)
-          case (None, None) => None
-        }
-      case InstantFn(k, c, args) =>
-        composedTree(c).map { case (g, ce) => (g, InstantFn(k, ce, args)) }
-      case _ => None
-    }
+        case InstantFn(_, c, _) => aggGrouping(c, composed = true)
+        case _ => None
+      }
     // topk/bottomk k over the bridge: ALWAYS the engine's k-subplan
     // path (scalarK — literals take its no-Spark-job fast arm), so
     // every topk surface interprets the same k text identically
     // (round-and-clamp; a local v.toInt here would truncate 2.9 → 2
     // while the engine rounds → 3, review r13)
     def kOf(kExpr: Expr): Int = e.scalarK(kExpr, startMs, endMs)
-    // the grouping a subquery inner's aggregate tree carries, if any —
-    // walked (first hit wins) so the bridge can route grouped sliding
-    // subqueries through queryRangeBy; the engine re-validates that
-    // every aggregate in the tree agrees with the evaluation grouping.
-    // DELIBERATE asymmetry with composedTree's top-level mixed()
-    // rejection: inside a subquery the ENGINE's grouped evaluator owns
-    // the semantics, where grouping DISTRIBUTES over the whole inner —
-    // an aggregate-free operand beside a grouped aggregate evaluates
-    // per group (the ts101 convention: `sum_over_time(a[1d]) /
-    // sum_over_time(b[1d])` by user groups BOTH sides); at top level
-    // the ungrouped side would evaluate POOLED (slidingEval), and
-    // pooled × grouped genuinely has no shared key
-    def subqueryGrouping(e: Expr): Option[Grouping] = e match {
-      case Aggregate(_, c, g) => g.orElse(subqueryGrouping(c))
-      case BinaryOp(_, l, r, _) =>
-        subqueryGrouping(l).orElse(subqueryGrouping(r))
-      case InstantFn(_, c, _) => subqueryGrouping(c)
-      case RangeFn(_, c, _) => subqueryGrouping(c)
-      case SubqueryMatrix(c, _, _, _) => subqueryGrouping(c)
-      case _ => None
-    }
     // count_values anywhere in a sampler child: the sampler picks
     // SERIES and count_values keys its output series by VALUE text, so
     // routing it to the grouped evaluator would fail deep with a
@@ -569,28 +521,29 @@ object Web {
     // per-step sampling dispatch shared by ranged limitk/limit_ratio
     // (round 15): matched grouped binaries route through the engine's
     // matched twins (series key = many-side groups + carried labels);
-    // any other child whose grouping resolves samples its grouped
-    // matrix through the queryRangeBy scope — grouped aggregates,
-    // grouped binaries and set-ops, exactly the inners the engine
-    // surface already takes
+    // any other child whose grouping resolves (the engine's
+    // innerGrouping walk) samples its grouped matrix through the
+    // queryRangeBy scope — grouped aggregates, grouped binaries and
+    // set-ops, exactly the inners the engine surface already takes
     def rangedSample(child: Expr, op: String, hint: String)(
         groupedInner: Grouping => DataFrame,
         matchedInner: (Expr, Grouping, Expr, Grouping, BinKind,
           VectorMatch) => DataFrame): PromMatrix =
       child match {
-        case BinaryOp(kind, Aggregate(lk, lc, Some(gl)),
-            Aggregate(rk, rc, Some(gr)), Some(vm)) =>
+        case BinaryOp(kind, l @ Aggregate(lk, lc, Some(gl)),
+            r @ Aggregate(rk, rc, Some(gr)), Some(vm)) =>
           val cols = e.matchedSeriesCols(gl, gr, vm)
           val manyBy = (if (vm.card == OneToMany) gr else gl).by
-          val df = matchedInner(
-            bridgeInner(lk, lc), gl, bridgeInner(rk, rc), gr, kind, vm)
+          checkAgg(lk, lc, composed = true)
+          checkAgg(rk, rc, composed = true)
+          val df = matchedInner(l, gl, r, gr, kind, vm)
           PromMatrix(cols, canonical = !manyBy, df.orderBy(
             (cols :+ "timestamp").map(col): _*).collect())
         case _ =>
           require(!containsCountValues(child),
             s"ranged $op samples SERIES — count_values keys series by " +
               s"VALUE text; aggregate into label groups instead: $hint")
-          subqueryGrouping(child) match {
+          e.innerGrouping(child) match {
             case Some(g) =>
               val cols = groupCols(g)
               val df = groupedInner(g)
@@ -601,27 +554,14 @@ object Web {
                 s"first: $hint; got child: $child")
           }
       }
-    // composition roots dispatch ONCE (walking twice would re-run
-    // composedTree's validation); single Aggregate roots stay on the
-    // more capable aggregate() arm (its pooledIdentity covers the
-    // count→1/stddev→0 transforms bridgeInner can't express)
-    val composed = ast match {
-      case e @ (_: BinaryOp | _: InstantFn) => composedTree(e)
-      case _ => None
-    }
-    composed match {
-      case Some((Some(g), inner)) => return grouped(g, inner)
-      case Some((None, inner)) => return ungrouped(inner)
-      case None => ()
-    }
     ast match {
       // MATCHED grouped composition — the share-of-parent panel:
       // `sum by (a,b) (x) / on (a) group_left sum by (a) (y)` at every
-      // step. Each side maps through bridgeInner with its own grouping
-      // and the engine joins per (match key, step); the series labels
-      // are the MANY side's groups plus any carried labels
-      case BinaryOp(kind, Aggregate(lk, lc, Some(gl)),
-          Aggregate(rk, rc, Some(gr)), Some(vm)) =>
+      // step. Each side evaluates under its own grouping and the engine
+      // joins per (match key, step); the series labels are the MANY
+      // side's groups plus any carried labels
+      case BinaryOp(kind, l @ Aggregate(lk, lc, Some(gl)),
+          r @ Aggregate(rk, rc, Some(gr)), Some(vm)) =>
         // `without` sides ride the canonical labels column (round 13 —
         // the engine re-opens the match-key values); the serializer
         // decodes the canonical group identity back into metric fields
@@ -631,8 +571,9 @@ object Web {
             "supported over the API bridge — the carried column has " +
             "no metric field inside the canonical identity; re-group " +
             "the many side with `by`")
-        val df = e.queryRangeByMatched(
-          bridgeInner(lk, lc), gl, bridgeInner(rk, rc), gr,
+        checkAgg(lk, lc, composed = true)
+        checkAgg(rk, rc, composed = true)
+        val df = e.queryRangeByMatched(l, gl, r, gr,
           kind, vm, startMs, endMs, stepMs)
         val cols =
           (if (manyG.by) manyG.labels else Seq("labels")) ++ vm.carry
@@ -648,13 +589,11 @@ object Web {
         val df = e.countValuesRange(label, inner, startMs, endMs, stepMs)
         PromMatrix(Seq(label), canonical = false, df.orderBy(
           col(label), col("timestamp")).collect())
-      case Aggregate(kind, child, g) =>
-        aggregate(kind, child, g)
       case GetK(top, kExpr, agg @ Aggregate(_, _, Some(gr)), None) =>
         // topk(k, sum by (u) (...)): the k best groups at each step —
         // the engine's per-step rank (queryRangeGetK, round 13; its
-        // ge() Aggregate arm does the windowed/pooled translation this
-        // arm used to duplicate); k literal or scalar expression
+        // sliding Aggregate arm does the windowed/pooled translation);
+        // k literal or scalar expression
         val cols = groupCols(gr)
         val df = e.queryRangeGetK(top, kExpr, agg, gr,
           startMs, endMs, stepMs)
@@ -700,20 +639,23 @@ object Web {
         // sliding subquery — routes GROUPED when the inner tree holds
         // a by/without aggregate (`quantile_over_time(0.9, sum by (s)
         // (rate(m[5m]))[1h:5m])`): the group columns become the series
-        // labels and the engine's grouped Aggregate arm evaluates;
-        // groupless inners ride the plain ungrouped path below
-        subqueryGrouping(inner) match {
-          case Some(g) =>
-            val cols = groupCols(g)
-            val df = e.queryRangeBy(rf, g, startMs, endMs, stepMs)
-            PromMatrix(cols, canonical = !g.by, df.orderBy(
-              (cols :+ "timestamp").map(col): _*).collect())
+        // labels. DELIBERATE asymmetry with aggGrouping's grouped × raw
+        // rejection: inside a subquery the grouping DISTRIBUTES over
+        // the whole inner — an aggregate-free operand beside a grouped
+        // aggregate evaluates per group (the ts101 convention:
+        // `sum_over_time(a[1d]) / sum_over_time(b[1d])` by user groups
+        // BOTH sides)
+        e.innerGrouping(inner) match {
+          case Some(g) => grouped(g, rf)
           case None => ungrouped(rf)
         }
       case other =>
-        // the sliding evaluator takes the already-parsed AST — parsing
-        // once guarantees the dispatched and evaluated trees agree
-        ungrouped(other)
+        // the engine takes the already-parsed AST — parsing once
+        // guarantees the validated and evaluated trees agree
+        aggGrouping(other, composed = false).flatten match {
+          case Some(g) => grouped(g, other)
+          case None => ungrouped(other)
+        }
     }
   }
 
@@ -902,15 +844,7 @@ object Web {
     // convention) selects the GROUPED rule — one derived stream per
     // group under `target`, labels preserved; it requires "step"
     // (grouped rules record the per-step series)
-    val by: List[String] = field("by") match {
-      case None => Nil
-      case Some(n) if n.isArray =>
-        val it = n.elements(); val b = List.newBuilder[String]
-        while (it.hasNext) b += it.next().asText()
-        b.result()
-      case Some(n) =>
-        n.asText().split(',').map(_.trim).filter(_.nonEmpty).toList
-    }
+    val by = field("by").map(byLabels).getOrElse(Nil)
     val db = new GraftDb(spark, path)
     val n =
       if (by.isEmpty)
@@ -944,6 +878,17 @@ object Web {
     mapper.writeValueAsString(root)
   }
 
+  /** A request's "by" field: a JSON array of label names, or one
+    * comma-separated string.
+    */
+  private def byLabels(n: com.fasterxml.jackson.databind.JsonNode)
+      : List[String] =
+    if (n.isArray) {
+      val it = n.elements(); val b = List.newBuilder[String]
+      while (it.hasNext) b += it.next().asText()
+      b.result()
+    } else n.asText().split(',').map(_.trim).filter(_.nonEmpty).toList
+
   /** The request's `path` field, rejected unless it resolves under the
     * configured db root (no arbitrary filesystem access from the
     * network).
@@ -976,15 +921,9 @@ object Web {
     // series at each step (GraftDb.queryRangeBy; the CLI's
     // `query-range-by` twin). Whole-range grouped queries don't need
     // the field: write the by-clause in the PromQL text.
-    field("by") match {
+    field("by").map(byLabels) match {
       case None => ()
-      case Some(n) =>
-        val ls: List[String] =
-          if (n.isArray) {
-            val it = n.elements(); val b = List.newBuilder[String]
-            while (it.hasNext) b += it.next().asText()
-            b.result()
-          } else n.asText().split(',').map(_.trim).filter(_.nonEmpty).toList
+      case Some(ls) =>
         val step = field("step").map(_.asLong()).getOrElse(
           throw new IllegalArgumentException(
             "\"by\" requires \"step\" (it selects grouped query_range " +

@@ -120,14 +120,9 @@ final class TsdbEngine(
     * each over the SLIDING lookback window (T - range, T] — the HTTP
     * query_range contract, vs [[query]]'s one-pass tumbling shape. The
     * selector scan extends `range` behind startMs so every window sees
-    * its full lookback. Scope ([[slidingEval]]): range functions over
-    * matrix selectors OR subqueries, optionally under instant math,
-    * binary or set composition (`rate(a[5m]) / rate(b[5m])` — each
-    * side scans once, the sides join on the step grid) — evaluating
-    * an arbitrary
-    * expression per step would re-run whole-range subplans step-count
-    * times, which is exactly the scan amplification this engine refuses
-    * to hide (the error says so).
+    * its full lookback. This is [[queryRangeBy]]'s sliding recursion
+    * run with NO group columns (the whole selection is one pooled
+    * series); see [[sliding]] for the accepted shapes.
     */
   def queryRange(promql: String, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult =
@@ -138,152 +133,8 @@ final class TsdbEngine(
     */
   def queryRange(e: Expr, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult =
-    TsdbResult(slidingEval(e, startMs, endMs, stepMs),
+    TsdbResult(sliding(e, None, startMs, endMs, stepMs),
       isScalar = false, VType.F64)
-
-  /** Sliding per-step evaluation — queryRange's body, also the inner
-    * evaluation of a subquery `expr[range:step]`. Accepted shapes:
-    *
-    *  - a range function over a matrix selector (the base case),
-    *  - instant math over any accepted shape (row-local value map),
-    *  - BINARY COMPOSITION: `rate(a[5m]) / rate(b[5m])` — the
-    *    ratio-panel dashboard shape. Both sides are step-keyed derived
-    *    series on the SAME eval grid (step-count × series bounded,
-    *    metadata-sized), so an equi-join on the eval timestamp composes
-    *    them with NO scan amplification: each side scans its own
-    *    selector exactly once. Vector·vector is arithmetic-only (V2V
-    *    comparison is rejected in whole-range evaluation too); a
-    *    literal operand is row-local — arithmetic maps the value,
-    *    comparison filters keeping the value (the V2S rule). A step
-    *    with no row on either side (e.g. rate's ≥2-sample rule) emits
-    *    nothing, like PromQL's vector matching.
-    *  - SET OPERATORS (and/or/unless) between accepted shapes — the
-    *    step grid is the match key (see the set-op arm); the masking
-    *    idiom `rate(a[5m]) and (rate(b[5m]) > 0.2)` composes freely,
-    *    including inside a subquery.
-    *  - range functions over SUBQUERIES (`max_over_time(
-    *    rate(m[5m])[1h:5m])` under query_range): the inner evaluates
-    *    once over the extended window on its own grid, the outer fn
-    *    slides over the derived frame (see the subquery arm).
-    *
-    * Anything else still refuses loudly: per-step re-evaluation of
-    * arbitrary whole-range expressions would rescan the store once per
-    * step — exactly the scan amplification this engine refuses to hide.
-    */
-  private def slidingEval(e: Expr, startMs: Long, endMs: Long,
-      stepMs: Long): DataFrame = e match {
-    case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-      RangeFns.sliding(kind,
-        select(sel, startMs - rangeMs + 1, endMs),
-        rangeMs, stepMs, startMs, endMs, fnArgs, mode = rateMode)
-    case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
-        fnArgs) =>
-      // sliding SUBQUERY — query_range of `fn(expr[range:step])`: the
-      // inner derived series must cover every outer window
-      // (T - subRange, T] for T ∈ [start, end], so it evaluates ONCE
-      // over [start - subRange, end] on its own subStep grid (grids
-      // anchor at their evaluation start, the engine convention the
-      // whole-range subquery documents; Prometheus anchors subquery
-      // grids to absolute time — same documented deviation), and the
-      // outer fn slides over the step-count-sized derived frame. No
-      // scan amplification: the inner's selectors each scan once.
-      // `offset` shifts the inner clock and reports on the outer one.
-      val derived = reportOnOuterClock(slidingEval(inner,
-        startMs - subRange - soff, endMs - soff, subStep), soff)
-      RangeFns.sliding(kind, derived, subRange, stepMs, startMs, endMs,
-        fnArgs, mode = rateMode)
-    case InstantFn(kind, child, fnArgs) =>
-      // row-local value maps compose over the sliding vector unchanged
-      slidingEval(child, startMs, endMs, stepMs).withColumn("value",
-        TsdbEngine.instantColumn(kind, fnArgs, col("value").cast("double")))
-    case BinaryOp(kind, lhs, rhs, None)
-        if isSetOp(kind) &&
-          (lhs.isInstanceOf[NumberLit] || rhs.isInstanceOf[NumberLit]) =>
-      throw new IllegalArgumentException(
-        "set operators (and/or/unless) take vector operands, not " +
-          "scalars (the Prometheus rule)")
-    case BinaryOp(kind, NumberLit(v), rhs, None) =>
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-      if (isComparison(kind)) r.where(cmp(kind, lit(v), col("value")))
-      else r.withColumn("value",
-        arith(kind, lit(v), col("value").cast("double")))
-    case BinaryOp(kind, lhs, NumberLit(v), None) =>
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-      if (isComparison(kind)) l.where(cmp(kind, col("value"), lit(v)))
-      else l.withColumn("value",
-        arith(kind, col("value").cast("double"), lit(v)))
-    case BinaryOp(kind, lhs, rhs, None) if isSetOp(kind) =>
-      // set operators between two sliding derived series — both sides
-      // are step-keyed on the SAME eval grid (≤1 row per step), so the
-      // PromQL element-match key degenerates to the step timestamp:
-      // `and` keeps left steps that exist on the right (semi join),
-      // `unless` the complement (anti join), `or` prefers left and
-      // fills the right's uncontested steps. Each side scans its own
-      // selector exactly once — the same no-amplification property as
-      // the arithmetic composition arm; this is what makes set algebra
-      // legal INSIDE a subquery (`(a and b)[1h:5m]`).
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("value"))
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("value"))
-      kind match {
-        case And => l.join(r.select("timestamp"), Seq("timestamp"), "left_semi")
-        case Unless => l.join(r.select("timestamp"), Seq("timestamp"), "left_anti")
-        case _ => l.unionByName(
-          r.join(l.select("timestamp"), Seq("timestamp"), "left_anti"))
-      }
-    case BinaryOp(kind, lhs, rhs, None) =>
-      require(!isComparison(kind),
-        "comparison between two sliding vectors is not supported " +
-          "(V2V comparison is rejected in whole-range evaluation too)")
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("lv"))
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("rv"))
-      l.join(r, Seq("timestamp"))
-        .select(col("timestamp"), arith(kind, col("lv"), col("rv")).as("value"))
-    case Aggregate(kind, child, None) =>
-      // AGGREGATE INNER — `sum(rate(m[5m]))` under query_range or as a
-      // subquery inner (`max_over_time(sum(rate(m[5m]))[1h:5m])`, the
-      // most-typed Prometheus rule shape): the pooled-series
-      // translation (see slidingAggregate). The child's selectors each
-      // scan once — no per-step re-evaluation.
-      val (inner, post) = slidingAggregate(kind, child, stepMs)
-      post(slidingEval(inner, startMs, endMs, stepMs))
-    case Aggregate(_, _, Some(g)) => throw new IllegalArgumentException(
-      s"grouped aggregate (${if (g.by) "by" else "without"} " +
-        s"${g.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
-        "sliding evaluation — its group columns must appear in the " +
-        "output; evaluate through queryRangeBy/subqueryRangeBy with " +
-        "the same grouping")
-    case other => throw new IllegalArgumentException(
-      "sliding evaluation takes range functions over matrix selectors " +
-        "or subqueries, optionally under instant math, aggregation, " +
-        "binary or set " +
-        s"composition, got: $other — per-step re-evaluation of " +
-        "arbitrary expressions would rescan the store once per step; " +
-        "use query() for whole-range shapes")
-  }
-
-  /** Aggregate node admitted into sliding evaluation — the
-    * pooled-series translation the API bridge proved
-    * ([[graft.tools.Web]]'s bridgeInner/pooledIdentity), engine-native
-    * so `max_over_time(sum(rate(m[5m]))[1h:5m])` and its grouped twin
-    * evaluate on BOTH surfaces: a bare-selector child maps to the
-    * aggregation's `_over_time` twin over a step-sized window
-    * (Prometheus' staleness lookback tied to the step — the engine's
-    * documented bridge convention); an already-sliding child is ONE
-    * pooled series, so the aggregation collapses to the
-    * one-element-set answer (identity / 1 / 0) as a row-local
-    * post-map. Either way the child's selectors scan exactly once.
-    */
-  private def slidingAggregate(kind: AggKind, child: Expr,
-      stepMs: Long): (Expr, DataFrame => DataFrame) = child match {
-    case sel: Selector =>
-      val (k, args) = TsdbEngine.windowedAgg(kind)
-      (RangeFn(k, MatrixSelector(sel, stepMs), args), identity)
-    case other => (other, TsdbEngine.pooledAggPost(kind))
-  }
 
   /** The deterministic sampling order limitk/limit_ratio share: md5
     * over the group key (group values joined with a 0x01 separator;
@@ -382,7 +233,7 @@ final class TsdbEngine(
             queryRangeBy(inner, g, startMs, endMs, stepMs)
               .select(col("timestamp"), col("value"))
           case None =>
-            slidingEval(inner, startMs, endMs, stepMs)
+            sliding(inner, None, startMs, endMs, stepMs)
               .select(col("timestamp"), col("value"))
         }
     }
@@ -392,12 +243,13 @@ final class TsdbEngine(
       .select(col(label), col("timestamp"), col("value"))
   }
 
-  /** The grouping an inner tree evaluates under (the API bridge's
-    * subqueryGrouping rule): the first by/without clause found walking
-    * the composition — the convention that an aggregate-free operand
-    * beside a grouped aggregate evaluates per group.
+  /** The grouping an inner tree evaluates under: the first by/without
+    * clause found walking the composition — the convention that an
+    * aggregate-free operand beside a grouped aggregate evaluates per
+    * group. The API bridge routes sliding subqueries and ranged
+    * samplers by this same walk.
     */
-  private def innerGrouping(e: Expr): Option[Grouping] = e match {
+  private[graft] def innerGrouping(e: Expr): Option[Grouping] = e match {
     case Aggregate(_, c, g) => g.orElse(innerGrouping(c))
     case BinaryOp(_, l, r, _) =>
       innerGrouping(l).orElse(innerGrouping(r))
@@ -659,7 +511,7 @@ final class TsdbEngine(
       // `offset` shifts the inner evaluation range back and reports on
       // the outer clock — the step grid stays aligned to `start`.
       val derived = reportOnOuterClock(
-        slidingEval(inner, start - soff, end - soff, subStep), soff)
+        sliding(inner, None, start - soff, end - soff, subStep), soff)
       TsdbResult(
         RangeFns(kind, derived, subRange, start, end, fnArgs, rateMode),
         isScalar = false, VType.F64)
@@ -1630,24 +1482,19 @@ final class TsdbEngine(
     def applyOps(df: DataFrame): DataFrame = ops.foldLeft(df)((d, f) => f(d))
     val rows = core match {
       case sel: Selector =>
-        applyOps(data
-          .where(scanCond(sel, start, end))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*))
+        applyOps(select(sel, start, end, gCols)
+          .withColumn("value", col("value").cast("double")))
       case RangeFn(rk, MatrixSelector(sel, rangeMs), fnArgs) =>
         require(rk != FnAbsentOverTime,
           "absent_over_time has no grouped form (absence is not " +
             "attributable to a label value)")
         // window math runs on the REPORTED time (shiftedTs) so offset
         // moves windows with the data, like Prometheus
-        val base = data
-          .where(scanCond(sel, start, end))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*)
+        val base = select(sel, start, end, gCols)
           .select(gNames.map(col) ++ Seq(
             (col("timestamp") -
               pmod(col("timestamp") - start, lit(rangeMs))).as("wstart"),
-            col("timestamp"), col("value")): _*)
+            col("timestamp"), col("value").cast("double").as("value")): _*)
         applyOps(
           RangeFns.aggWindows(rk, base, fnArgs, gNames :+ "wstart",
             RangeFns.extrapolateSpec(rk, rateMode, col("wstart"), rangeMs))
@@ -1670,9 +1517,9 @@ final class TsdbEngine(
       case s: Selector => s
       case other => throw new IllegalArgumentException(s"not a selector: $other")
     }
-    val rows = data
-      .where(scanCond(sel, startMs, endMs))
-      .select(element_at(col("labels"), labelKey).as("group"), col("value"))
+    val rows = select(sel, startMs, endMs,
+        Seq(element_at(col("labels"), labelKey).as("group")))
+      .withColumn("value", col("value").cast("double"))
     val aggCol = kind match {
       case AggSum => sum(col("value"))
       case AggCount => count(lit(1)).cast("double")
@@ -1711,25 +1558,11 @@ final class TsdbEngine(
   def rangeAggregateBy(promql: String, grouping: Grouping,
       startMs: Long, endMs: Long): DataFrame =
     PromParser.parse(promql) match {
-      case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val (gNames, gCols) = groupProjection(grouping)
+      case rf @ RangeFn(_, _: MatrixSelector, _) =>
+        val (rows, gNames) = groupedVector(rf, grouping, startMs, endMs)
         require(gNames.nonEmpty,
           "by () has no grouped form — use the ungrouped evaluation")
-        val base = data
-          .where(scanCond(sel, startMs, endMs))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*)
-          .select(gNames.map(col) ++ Seq(
-            (col("timestamp") -
-              pmod(col("timestamp") - startMs, lit(rangeMs))).as("wstart"),
-            col("timestamp"), col("value")): _*)
-        RangeFns.aggWindows(kind, base, fnArgs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(kind, rateMode, col("wstart"), rangeMs))
-          .select(gNames.map(col) ++
-            Seq(col("wstart").as("timestamp"), col("value")): _*)
+        rows
       case other => throw new IllegalArgumentException(
         s"rangeAggregateBy requires a range function over a matrix " +
           s"selector, got: $other")
@@ -1755,22 +1588,52 @@ final class TsdbEngine(
     queryRangeBy(PromParser.parse(promql), grouping, startMs, endMs, stepMs)
 
   /** [[queryRangeBy]] from a pre-parsed AST (the Prometheus API
-    * bridge's grouped arm) — a RECURSIVE grouped twin of
-    * [[slidingEval]]: range functions over matrix selectors (the base
-    * case — one scan, per-(group, step) sliding windows), instant math
-    * and scalar-literal arithmetic/comparison (row-local), BINARY
-    * COMPOSITION (`sum_over_time(err[5m]) / sum_over_time(req[5m])` by
-    * service — both sides step-count × group-count derived frames on
-    * the same grid, joined on (group keys, step) with NULL-SAFE group
-    * equality so the missing-label group matches itself), and SET
-    * OPERATORS (semi/anti/union on the same key). Each selector scans
-    * exactly once — the no-amplification law, grouped.
+    * bridge's grouped arm): the [[sliding]] recursion keyed by the
+    * grouping's columns. Emits (group cols..., timestamp, value).
     */
   def queryRangeBy(parsed: Expr, grouping: Grouping,
       startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    val (gNames, gCols) = groupProjection(grouping)
-    require(gNames.nonEmpty,
+    require(groupProjection(grouping)._1.nonEmpty,
       "by () has no grouped form — use queryRange")
+    sliding(parsed, Some(grouping), startMs, endMs, stepMs)
+  }
+
+  /** The ONE sliding per-step evaluator: [[queryRange]] runs it with no
+    * grouping (the whole selection is one pooled series),
+    * [[queryRangeBy]] with one pooled series per label group, and every
+    * subquery `expr[range:step]` evaluates its inner through it. Frames
+    * are (group cols..., timestamp = eval time, value); ungrouped, the
+    * group columns are empty and every key below degenerates to the
+    * step timestamp. Accepted shapes:
+    *
+    *  - a range function over a matrix selector (the base case — one
+    *    scan, per-(group, step) sliding windows),
+    *  - a range function over a SUBQUERY (`max_over_time(rate(m[5m])
+    *    [1h:5m])`, see the subquery arm),
+    *  - instant math and scalar-literal arithmetic/comparison
+    *    (row-local; comparison filters keeping the value, the V2S rule),
+    *  - BINARY COMPOSITION (`rate(a[5m]) / rate(b[5m])`, the ratio
+    *    panel): both sides are step-keyed derived frames on the SAME
+    *    grid, joined on (group keys, step) with NULL-SAFE group equality
+    *    so the missing-label group matches itself. Arithmetic only (V2V
+    *    comparison is rejected in whole-range evaluation too); a step
+    *    with no row on either side emits nothing, like PromQL's vector
+    *    matching,
+    *  - SET OPERATORS (and/or/unless) on the same key — the masking
+    *    idiom `rate(a[5m]) and (rate(b[5m]) > 0.2)`, legal inside a
+    *    subquery too,
+    *  - AGGREGATES carrying the evaluation's grouping (see the
+    *    Aggregate arm).
+    *
+    * Each selector scans exactly once. Anything else refuses loudly:
+    * per-step re-evaluation of arbitrary whole-range expressions would
+    * rescan the store once per step — exactly the scan amplification
+    * this engine refuses to hide.
+    */
+  private def sliding(e: Expr, grouping: Option[Grouping],
+      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
+    val (gNames, gCols) = grouping.map(groupProjection).getOrElse((Nil, Nil))
+    val grouped = grouping.nonEmpty
     // null-safe (groups..., timestamp) key condition against a
     // suffix-renamed right side (the groupedBinary idiom; timestamps
     // are never null so plain equality there)
@@ -1780,42 +1643,40 @@ final class TsdbEngine(
         case "value" => "_rv"
         case g => g + "_graft_r"
       }.toIndexedSeq: _*)
-      (rk, gNames.map(k => col(k) <=> col(k + "_graft_r"))
-        .reduce(_ && _) && col("timestamp") === col("_rts"))
+      (rk, (gNames.map(k => col(k) <=> col(k + "_graft_r")) :+
+        (col("timestamp") === col("_rts"))).reduce(_ && _))
     }
     def ge(e: Expr): DataFrame = e match {
       case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val rows = data
-          .where(scanCond(sel, startMs - rangeMs + 1, endMs))
-          .select(gCols ++ Seq(shiftedTs(sel), col("value")): _*)
-        RangeFns.sliding(kind, rows, rangeMs, stepMs, startMs, endMs,
-          fnArgs, groupCols = gNames, mode = rateMode)
+        RangeFns.sliding(kind, select(sel, startMs - rangeMs + 1, endMs, gCols),
+          rangeMs, stepMs, startMs, endMs, fnArgs, groupCols = gNames,
+          mode = rateMode)
       case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
           fnArgs) =>
-        // grouped sliding subquery — the slidingEval arm's per-group
-        // twin: inner evaluated once per group on its subStep grid,
-        // outer fn slides per group over the derived frame. A FINER
-        // `by` inner grouping (round 14 — `max_over_time(sum by (a,b)
-        // (...)[1h:5m])` evaluated by (a)) evaluates per ITS grouping
-        // (first keyed group-by), drops the extra label columns, and
-        // the outer fn's (group, wstart) fold is the second keyed
-        // group-by — each evaluation group pools its sub-series'
-        // samples, the model's pooled-series rule applied to the
-        // derived frame. Still one scan.
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val ig = finerInnerGrouping(inner, grouping)
-        val all = queryRangeBy(inner, ig,
-          startMs - subRange - soff, endMs - soff, subStep)
-        val derived = reportOnOuterClock(
-          if (ig eq grouping) all
-          else projectInnerGroups(all, ig, gNames), soff)
-        RangeFns.sliding(kind, derived, subRange, stepMs, startMs, endMs,
-          fnArgs, groupCols = gNames, mode = rateMode)
+        // sliding SUBQUERY: the inner derived series must cover every
+        // outer window (T - subRange, T] for T ∈ [start, end], so it
+        // evaluates ONCE over [start - subRange, end] on its own subStep
+        // grid (grids anchor at their evaluation start, the engine
+        // convention the whole-range subquery documents; Prometheus
+        // anchors subquery grids to absolute time — same documented
+        // deviation), and the outer fn slides per group over the
+        // step-count-sized derived frame. `offset` shifts the inner
+        // clock and reports on the outer one. A FINER `by` inner
+        // grouping (`max_over_time(sum by (a,b) (...)[1h:5m])`
+        // evaluated by (a)) evaluates per ITS grouping, drops the extra
+        // label columns, and the outer fn's (group, wstart) fold pools
+        // each evaluation group's sub-series — the pooled-series rule
+        // applied to the derived frame. Still one scan.
+        val (lo, hi) = (startMs - subRange - soff, endMs - soff)
+        val derived = grouping match {
+          case None => sliding(inner, None, lo, hi, subStep)
+          case Some(g) =>
+            val ig = finerInnerGrouping(inner, g)
+            val all = sliding(inner, Some(ig), lo, hi, subStep)
+            if (ig eq g) all else projectInnerGroups(all, ig, gNames)
+        }
+        RangeFns.sliding(kind, reportOnOuterClock(derived, soff), subRange,
+          stepMs, startMs, endMs, fnArgs, groupCols = gNames, mode = rateMode)
       case InstantFn(kind, child, args) =>
         ge(child).withColumn("value",
           TsdbEngine.instantColumn(kind, args, col("value").cast("double")))
@@ -1858,41 +1719,63 @@ final class TsdbEngine(
         }
       case BinaryOp(kind, lhs, rhs, None) =>
         require(!isComparison(kind),
-          "comparison between two grouped sliding vectors is not " +
-            "supported (the V2V rule)")
+          if (grouped) "comparison between two grouped sliding vectors " +
+            "is not supported (the V2V rule)"
+          else "comparison between two sliding vectors is not supported " +
+            "(V2V comparison is rejected in whole-range evaluation too)")
         val l = ge(lhs)
         val (rk, cond) = keyed(ge(rhs))
         l.join(rk, cond).select(gNames.map(col) ++ Seq(col("timestamp"),
           arith(kind, col("value").cast("double"),
             col("_rv").cast("double")).as("value")): _*)
       case Aggregate(kind, child, g) =>
-        // GROUPED AGGREGATE INNER — `sum by (s) (rate(m[5m]))` inside
-        // a subquery or under grouped query_range: legal when the
-        // node's grouping IS the evaluation grouping (label ORDER
-        // never matters — group columns join by name); a groupless
-        // aggregate rides too, because the grouped evaluation already
+        // AGGREGATE INNER — `sum(rate(m[5m]))` or `sum by (s)
+        // (rate(m[5m]))` under query_range or as a subquery inner (the
+        // most-typed Prometheus rule shape). Legal when the node's
+        // grouping IS the evaluation grouping (label ORDER never
+        // matters — group columns join by name); a groupless aggregate
+        // rides a grouped evaluation too, because the evaluation already
         // pools each group's samples, which is exactly what the
-        // aggregate would do per group. A DIFFERENT grouping would
-        // need a second group-by level per step — re-group the outer
-        // evaluation instead.
-        require(g.forall(x => x.by == grouping.by &&
-            x.labels.toSet == grouping.labels.toSet),
-          s"aggregate grouping $g differs from the evaluation " +
-            s"grouping $grouping — sliding evaluation carries ONE " +
-            "group key; under a SUBQUERY a finer `by` superset pools " +
-            "into the evaluation grouping at the outer fold (round " +
-            "14), otherwise re-group the outer evaluation to match")
-        val (inner, post) = slidingAggregate(kind, child, stepMs)
-        post(ge(inner))
+        // aggregate would do per group. A DIFFERENT grouping would need
+        // a second group-by level per step.
+        grouping match {
+          case None => g.foreach(x => throw new IllegalArgumentException(
+            s"grouped aggregate (${if (x.by) "by" else "without"} " +
+              s"${x.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
+              "sliding evaluation — its group columns must appear in the " +
+              "output; evaluate through queryRangeBy/subqueryRangeBy with " +
+              "the same grouping"))
+          case Some(gr) => require(g.forall(x => x.by == gr.by &&
+              x.labels.toSet == gr.labels.toSet),
+            s"aggregate grouping $g differs from the evaluation " +
+              s"grouping $gr — sliding evaluation carries ONE " +
+              "group key; under a SUBQUERY a finer `by` superset pools " +
+              "into the evaluation grouping at the outer fold (round " +
+              "14), otherwise re-group the outer evaluation to match")
+        }
+        // the pooled-series translation: a bare-selector child maps to
+        // the aggregation's `_over_time` twin over a step-sized window
+        // (Prometheus' staleness lookback tied to the step); an
+        // already-sliding child is ONE pooled series, so the aggregation
+        // collapses to the one-element-set answer (identity / 1 / 0) as
+        // a row-local post-map. Either way the child scans once.
+        child match {
+          case sel: Selector =>
+            val (k, args) = TsdbEngine.windowedAgg(kind)
+            ge(RangeFn(k, MatrixSelector(sel, stepMs), args))
+          case other => TsdbEngine.pooledAggPost(kind)(ge(other))
+        }
       case other => throw new IllegalArgumentException(
-        "grouped sliding evaluation takes range functions over matrix " +
-          "selectors or subqueries, optionally under instant math, " +
-          s"aggregation, scalar-literal arithmetic/comparison, binary " +
-          s"or set " +
-          s"composition, got: $other — per-step re-evaluation of " +
-          "arbitrary expressions would rescan the store once per step")
+        (if (grouped) "grouped " else "") + "sliding evaluation takes " +
+          "range functions over matrix selectors or subqueries, " +
+          "optionally under instant math, aggregation, " +
+          (if (grouped) "scalar-literal arithmetic/comparison, " else "") +
+          s"binary or set composition, got: $other — per-step " +
+          "re-evaluation of arbitrary expressions would rescan the " +
+          "store once per step" +
+          (if (grouped) "" else "; use query() for whole-range shapes"))
     }
-    ge(parsed)
+    ge(e)
   }
 
   /** MATCHED grouped sliding composition — the share-of-parent panel
@@ -2063,8 +1946,8 @@ final class TsdbEngine(
     * exact property the ungrouped subquery case documents. Emits
     * (group cols..., timestamp = outer window start, value).
     *
-    * Scope: the inner is anything the grouped sliding evaluator
-    * accepts ([[queryRangeBy]]'s recursion — range fns over matrix
+    * Scope: the inner is anything the sliding evaluator accepts
+    * ([[sliding]]'s recursion — range fns over matrix
     * selectors under instant math, scalar-literal arithmetic/
     * comparison, binary or set composition), so the grouped and
     * ungrouped subquery surfaces accept the SAME inner algebra.
@@ -2083,7 +1966,7 @@ final class TsdbEngine(
         // subquery offset: inner evaluated on the shifted clock,
         // reported on the outer one. A finer `by` inner grouping
         // evaluates per its own key and pools into the evaluation
-        // groups at the tumbling fold (round 14; the ge() subquery
+        // groups at the tumbling fold (round 14; the sliding subquery
         // arm's rule)
         val ig = finerInnerGrouping(inner, grouping)
         val all = queryRangeBy(inner, ig,
@@ -2194,7 +2077,8 @@ final class TsdbEngine(
       else if (shifted < 0) 0L else shifted
   }
 
-  private def select(sel: Selector, queryStart: Long, queryEnd: Long): DataFrame = {
+  private def select(sel: Selector, queryStart: Long, queryEnd: Long,
+      gCols: Seq[Column] = Nil): DataFrame = {
     val vt = catalog.vtypeOf(sel.name, sel.matchers)
     val typedValue =
       if (vt == VType.F64) scanValue
@@ -2203,7 +2087,7 @@ final class TsdbEngine(
       else scanValue.cast("long").as("value")
     data
       .where(scanCond(sel, queryStart, queryEnd))
-      .select(shiftedTs(sel), typedValue)
+      .select(gCols ++ Seq(shiftedTs(sel), typedValue): _*)
   }
 
   /** AggregateNode: whole-range aggregate → one scalar. Empty input emits

@@ -573,6 +573,34 @@ class LibrarySpec extends AnyFunSuite {
       Map("a" -> "1", "b" -> "2"))
   }
 
+  test("integer streams read the exact lvalue on the grouped surfaces too") {
+    val db = new GraftDb(spark,
+      Files.createTempDirectory("graftdb_int").toString)
+    // non-integral doubles into i64 streams: `value` keeps them, the
+    // exact `lvalue` sidecar holds their rounding — every scan must
+    // answer from the latter
+    Seq("a" -> 0.7, "b" -> 0.4).foreach { case (l, frac) =>
+      db.createStream(s"""x{l="$l"}""", VType.I64)
+      val ins = db.inserter(s"""x{l="$l"}""")
+      (0L until 8L).foreach(i => ins.insert(i * 10L, i + frac))
+      ins.flush()
+    }
+    def num(q: String): Double =
+      db.query(q, 0L, 100L).output.head().get(0).asInstanceOf[Number]
+        .doubleValue()
+    assert(num("sum(x)") == 64.0)
+    assert(num("sum by () (x)") == num("sum(x)"))
+    val by = graft.tsdb.Expr.Grouping(by = true, List("l"))
+    val grouped = db.queryRangeBy("sum_over_time(x[20ms])", by, 0L, 70L, 10L)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
+      .toMap
+    val ungrouped = Seq("a", "b").flatMap { l =>
+      db.queryRange(s"""sum_over_time(x{l="$l"}[20ms])""", 0L, 70L, 10L)
+        .df.collect().map(r => (l, r.getLong(0)) -> r.getDouble(1))
+    }.toMap
+    assert(grouped.nonEmpty && grouped == ungrouped)
+  }
+
   test("deleteStream refuses when several streams share the name") {
     val dir = java.nio.file.Files.createTempDirectory("graft_del2").toString
     val db = new GraftDb(spark, dir)

@@ -316,6 +316,94 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("grouped query_range restricted to one group equals the narrowed ungrouped one") {
+    // two names × two series, each series the only one carrying its
+    // value of label `l`: grouping by (l) is per-series evaluation
+    val ls = Seq("a", "b")
+    val data = samples(Gen.listOfN(48, for {
+      n <- Gen.oneOf("x", "y")
+      l <- Gen.oneOf(ls)
+      t <- Gen.choose(0L, 110L)
+      v <- Gen.choose(1L, 20L).map(_.toDouble)
+    } yield (n, Map("l" -> l), t, v)), 1, seed = 11L).head
+    val e = new TsdbEngine(spark, TsdbFixtures.longDf(data),
+      new StreamCatalog(for (n <- Seq("x", "y"); l <- ls)
+        yield StreamDef(n, Map("l" -> l), VType.F64)))
+    // a query rendered with every selector narrowed to l="v" (or not)
+    type Q = Option[String] => String
+    def sel(n: String): Q = l => n + l.fold("")(v => s"""{l="$v"}""")
+    val leaf: Gen[Q] = for {
+      f <- Gen.oneOf("sum_over_time", "max_over_time", "count_over_time",
+        "rate", "last_over_time", "avg_over_time")
+      n <- Gen.oneOf("x", "y")
+      w <- Gen.oneOf(15, 30, 45)
+    } yield l => s"$f(${sel(n)(l)}[${w}ms])"
+    val aggSel: Gen[Q] = for {
+      a <- Gen.oneOf("sum", "max", "count", "avg")
+      n <- Gen.oneOf("x", "y")
+    } yield l => s"$a(${sel(n)(l)})"
+    def tree(d: Int): Gen[Q] =
+      if (d == 0) Gen.oneOf(leaf, aggSel)
+      else Gen.frequency(
+        2 -> leaf,
+        1 -> aggSel,
+        1 -> (for {
+          f <- Gen.oneOf("abs", "ceil", "floor")
+          c <- tree(d - 1)
+        } yield (l: Option[String]) => s"$f(${c(l)})"),
+        2 -> (for {
+          op <- Gen.oneOf("+", "-", "*", "/", ">", "<=")
+          v <- Gen.oneOf(1.0, 2.5)
+          litLeft <- Gen.oneOf(op != "/", false)
+          c <- tree(d - 1)
+        } yield (l: Option[String]) =>
+          if (litLeft) s"$v $op (${c(l)})" else s"(${c(l)}) $op $v"),
+        3 -> (for {
+          op <- Gen.oneOf("+", "-", "*", "and", "or", "unless")
+          a <- tree(d - 1)
+          b <- tree(d - 1)
+        } yield (l: Option[String]) => s"(${a(l)}) $op (${b(l)})"),
+        1 -> (for {
+          a <- Gen.oneOf("sum", "max", "count", "min")
+          c <- tree(d - 1)
+        } yield (l: Option[String]) => s"$a(${c(l)})"),
+        1 -> (for {
+          f <- Gen.oneOf("max_over_time", "sum_over_time", "count_over_time")
+          r <- Gen.oneOf(20L, 40L)
+          st <- Gen.oneOf(5L, 10L)
+          c <- tree(d - 1)
+        } yield (l: Option[String]) => s"$f((${c(l)})[${r}ms:${st}ms])"))
+    def close(a: Option[Double], b: Option[Double]): Boolean = (a, b) match {
+      case (Some(x), Some(y)) =>
+        x == y || (x.isNaN && y.isNaN) ||
+          math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
+      case _ => a == b
+    }
+    val by = graft.tsdb.Expr.Grouping(by = true, List("l"))
+    var answered = 0
+    for (((q, start), step) <- samples(for {
+        q <- tree(2); s <- Gen.oneOf(20L, 40L); st <- Gen.oneOf(10L, 15L)
+      } yield ((q, s), st), 6, seed = 3L)) {
+      val grouped = e.queryRangeBy(q(None), by, start, start + 60, step)
+        .collect().map(r =>
+          (r.getString(0), r.getLong(1)) -> Option(r.get(2)).map(_.asInstanceOf[Double]))
+      assert(grouped.map(_._1).distinct.length == grouped.length, q(None))
+      val got = grouped.toMap
+      ls.foreach { v =>
+        val want = e.queryRange(q(Some(v)), start, start + 60, step).df
+          .collect().map(r =>
+            r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+        val mine = got.collect { case ((`v`, t), x) => t -> x }
+        assert(mine.keySet == want.keySet &&
+          want.forall { case (t, x) => close(mine(t), x) },
+          s"${q(None)} group $v: grouped $mine vs narrowed $want")
+      }
+      if (got.nonEmpty) answered += 1
+    }
+    // vacuous unless most trees answer rows
+    assert(answered >= 4, s"only $answered of 6 trees answered rows")
+  }
+
   test("extrapolated increase equals the Prometheus formula, brute-forced") {
     for ((series, w, _, start, end0) <- samples(slidingGen, 6)) {
       val end = math.max(end0, start + 1)
