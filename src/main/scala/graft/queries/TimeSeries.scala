@@ -1011,15 +1011,10 @@ object TimeSeries {
     // shape with the step dimension added. Both sides are group×step
     // derived frames; the cohort side broadcasts.
     "ts106_sliding_matched" -> { (s, dir) =>
-      engineCohort(s, dir).queryRangeByMatched(
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort", "user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engineCohort(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "sum by (cohort, user) (sum_over_time(purchase[1d])) / on (cohort) " +
+          "group_left sum by (cohort) (sum_over_time(purchase[1d]))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("cohort"), col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
         .orderBy(col("cohort"), col("user").cast("long"), col("timestamp"))
@@ -1082,20 +1077,15 @@ object TimeSeries {
         .orderBy("labels")
     },
 
-    // ... and its SLIDING twin through queryRangeByMatched: the same
+    // ... and its SLIDING twin through queryRange: the same
     // share-of-cohort ratio at every 12h step over 1-day windows, the
     // `without` side riding the canonical column with `on (cohort)`
     // re-opened per row.
     "ts111_sliding_matched_without" -> { (s, dir) =>
-      engineTier(s, dir).queryRangeByMatched(
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = false, List("user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engineTier(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "sum without (user) (sum_over_time(purchase[1d])) / on (cohort) " +
+          "group_left sum by (cohort) (sum_over_time(purchase[1d]))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("labels"), col("timestamp"),
           round(col("value"), 9).as("value"))
         .orderBy(col("labels"), col("timestamp"))
@@ -1128,11 +1118,9 @@ object TimeSeries {
     // STEP (ties to the group key ascending, the grouped whole-range
     // rule; ranks over the group×step frame, never a global sort).
     "ts113_sliding_topk" -> { (s, dir) =>
-      engine(s, dir).queryRangeGetK(top = true,
-        graft.tsdb.Expr.NumberLit(3),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("user")),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "topk(3, sum by (user) (sum_over_time(purchase[1d])))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1145,21 +1133,18 @@ object TimeSeries {
     // the window). The HTTP bridge's ranged dispatch serves exactly
     // these frames.
     "ts116_sliding_limitk" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitK(
-        graft.tsdb.Expr.NumberLit(3),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("user")),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "limitk(3, sum by (user) (sum_over_time(purchase[1d])))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
     },
 
     "ts117_sliding_limit_ratio" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitRatio(-0.5,
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("user")),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "limit_ratio(-0.5, sum by (user) (sum_over_time(purchase[1d])))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1172,12 +1157,10 @@ object TimeSeries {
     // (user, step) matrix, so n varies where a user lacks either
     // series in a window. Same one-scan-per-selector bound as ts101.
     "ts122_ranged_limitk_binary" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitK(
-        graft.tsdb.Expr.NumberLit(2),
-        graft.tsdb.PromParser.parse(
-          "sum_over_time(click[1d]) / sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("user")),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "limitk(2, sum by (user) (sum_over_time(click[1d])) / " +
+          "sum by (user) (sum_over_time(purchase[1d])))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1205,16 +1188,11 @@ object TimeSeries {
     // md5 sampling text) is the many side's groups (cohort, user), so
     // the pick is deterministic and oracle-checkable per step.
     "ts123_ranged_limitk_matched" -> { (s, dir) =>
-      engineCohort(s, dir).queryRangeLimitKMatched(
-        graft.tsdb.Expr.NumberLit(2),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort", "user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engineCohort(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        "limitk(2, sum by (cohort, user) (sum_over_time(purchase[1d])) / " +
+          "on (cohort) group_left sum by (cohort) " +
+          "(sum_over_time(purchase[1d])))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("cohort"), col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
         .orderBy(col("cohort"), col("user").cast("long"), col("timestamp"))
@@ -1262,17 +1240,17 @@ object TimeSeries {
     // — "how many users produced exactly N purchases in the last 12h",
     // the cohort-histogram panel.
     "ts118_count_values_rate" -> { (s, dir) =>
-      engineDedup(s, dir).countValuesRange("v",
-        graft.tsdb.PromParser.parse("round(rate(purchase[1d]) * 1000)"),
-        SubStart, SubEnd, 6 * 3600 * 1000L)
+      engineDedup(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        """count_values("v", round(rate(purchase[1d]) * 1000))"""),
+        SubStart, SubEnd, 6 * 3600 * 1000L).output
         .orderBy(col("v"), col("timestamp"))
     },
 
     "ts119_count_values_grouped" -> { (s, dir) =>
-      engine(s, dir).countValuesRange("v",
-        graft.tsdb.PromParser.parse(
-          "round(sum by (user) (count_over_time(purchase[12h])))"),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(graft.tsdb.PromParser.parse(
+        """count_values("v", """ +
+          "round(sum by (user) (count_over_time(purchase[12h]))))"),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .orderBy(col("v"), col("timestamp"))
     },
 
@@ -1283,9 +1261,9 @@ object TimeSeries {
     // two surfaces agree on label text. The HTTP bridge serves exactly
     // this frame.
     "ts112_count_values_range" -> { (s, dir) =>
-      engine(s, dir).countValuesRange("v",
-        graft.tsdb.Expr.Selector("purchase", Nil, None, 0L),
-        SubStart, SubEnd, 12 * 3600 * 1000L)
+      engine(s, dir).queryRange(
+        graft.tsdb.PromParser.parse("""count_values("v", purchase)"""),
+        SubStart, SubEnd, 12 * 3600 * 1000L).output
         .orderBy(col("v"), col("timestamp"))
     },
 

@@ -79,10 +79,10 @@ object Cli {
           0
         case Seq("query-range", promql, start, end, step) =>
           // Prometheus query_range: sliding (T-range, T] at every step
-          // (GraftDb.queryRange contract; the HTTP "step" field's twin)
-          db.queryRange(promql, start.toLong, end.toLong, step.toLong)
-            .output.orderBy("timestamp").collect()
-            .foreach(r => out(s"${r.getLong(0)} ${fmt(r.get(1))}"))
+          // (GraftDb.queryRange contract; the HTTP "step" field's twin);
+          // a grouped root prints like query-range-by
+          printResult(
+            db.queryRange(promql, start.toLong, end.toLong, step.toLong), out)
           0
         case Seq("query-range-by", promql, labels, start, end, step) =>
           // grouped sliding evaluation: comma-separated label list →
@@ -231,8 +231,9 @@ object Cli {
     * a decimal point, floats as-is.
     */
   /** Print a query result to the terminal: grouped (by/without) rows as
-    * "<group keys..> <value>" ordered by the keys, scalars bare, vectors
-    * as "<timestamp> <value>".
+    * "<group keys..> [<timestamp>] <value>" ordered by the keys (a ranged
+    * result carries the step timestamp), scalars bare, vectors as
+    * "<timestamp> <value>".
     */
   private def printResult(res: graft.tsdb.TsdbResult,
       out: String => Unit): Unit =

@@ -366,7 +366,22 @@ object Web {
     * collected (labels..., timestamp, value) rows.
     */
   private final case class PromMatrix(labels: Seq[String],
-      canonical: Boolean, rows: Array[Row])
+      canonical: Boolean, rows: Array[Row]) {
+    /** A row's series key: its label cells as text, NULL as "". */
+    def key(r: Row): Seq[String] =
+      labels.indices.map(i => if (r.isNullAt(i)) "" else r.get(i).toString)
+
+    /** Write one series' metric object: plain `by` labels map 1:1; the
+      * `without` canonical column (k=v,k=v, LabelCodec-escaped) re-opens
+      * into per-label fields — "" is the empty label set.
+      */
+    def putMetric(metric: ObjectNode, key: Seq[String]): Unit =
+      if (canonical)
+        LabelCodec.decodeLabels(key.headOption.getOrElse(""),
+            s"without group '${key.headOption.getOrElse("")}'")
+          .toSeq.sortBy(_._1).foreach { case (k, v) => metric.put(k, v) }
+      else labels.zip(key).foreach { case (l, v) => metric.put(l, v) }
+  }
 
   /** The ONE definition of "an already-windowed inner the sliding
     * evaluator accepts": a range function over a matrix selector or a
@@ -381,57 +396,33 @@ object Web {
     }
   }
 
-  /** Route a Prometheus-API query to the engine's one sliding evaluator
-    * ([[graft.tsdb.TsdbEngine.queryRange]] / `queryRangeBy`), which
-    * evaluates the tree as parsed. Shape mapping, documented where it
-    * deviates:
+  /** Evaluate a Prometheus-API query: validate, rewrite a bare
+    * selector, hand the tree to the engine's ONE query_range entry
+    * ([[graft.tsdb.TsdbEngine.queryRange]], which evaluates every root
+    * shape and names the result's series), collect the rows in series
+    * order.
     *
-    *  - `rate(m[5m])` and the other sliding shapes (instant math /
-    *    binary and set composition) evaluate as-is — one unlabeled
-    *    series.
-    *  - aggregate-carrying trees (`sum by (u) (rate(m[5m]))`, `sum(m)`,
-    *    `sum by (s) (err) / sum by (s) (req)`) go to the engine whole:
-    *    `queryRangeBy` under the tree's grouping, `queryRange` when it
-    *    has none. The engine's sliding Aggregate arm evaluates each
-    *    group over its POOLED samples (this engine's grouping
-    *    convention — a group IS one series), so over an already-
-    *    windowed inner the aggregation family answers exactly as
-    *    Prometheus does for a one-series group: sum/avg/min/max/
-    *    quantile are the identity, count is 1, stddev/stdvar are 0; over
-    *    a bare selector it is the per-step window statistic
-    *    (sum/avg/min/max/count/stddev/stdvar/quantile _over_time of the
-    *    group's samples in each step window).
-    *  - a bare selector `m` → last sample per step within a step-sized
-    *    lookback (`last_over_time(m[step])` — Prometheus' staleness
-    *    lookback, with the window tied to the step instead of 5m).
-    *  - `without` grouping emits the engine's canonical label-set
-    *    column; the serializer decodes it back to metric fields.
-    *  - `topk(k, <grouped aggregate>)` / bottomk → the k best groups
-    *    AT EACH STEP by value (a step-partitioned rank over the
-    *    step-count × group-count frame — bounded, never a global
-    *    sort).
-    *
-    * The bridge accepts less than the engine: one validation walk
-    * (`aggGrouping`), run before evaluation, keeps its narrower rules
-    * as 400s.
+    *  - Validation: the bridge accepts less than the engine. One walk,
+    *    run before evaluation, keeps its narrower rules as 400s: the
+    *    aggregate-child shape rule (`checkAgg`), grouped × raw mixing and
+    *    same-grouping composition (`aggGrouping`), label-carry onto a
+    *    `without` many side (the carried column has no metric field in
+    *    the canonical identity), the within-group topk child, and
+    *    count_values under a sampler.
+    *  - Rewrite: a bare selector `m` — the root, or the child of a
+    *    within-group `topk by (s) (k, m)` — becomes the last sample per
+    *    step within a step-sized lookback, `last_over_time(m[step])`
+    *    (Prometheus' staleness lookback, with the window tied to the
+    *    step instead of 5m).
+    *  - Aggregates evaluate each group over its POOLED samples (a
+    *    group IS one series — [[graft.tsdb.TsdbEngine.windowedAgg]] and
+    *    `pooledAggPost` give the per-step answers); `without` groupings
+    *    key the series by the canonical label-set column, which the
+    *    serializer decodes back to metric fields.
     */
   private def promEval(db: GraftDb, ast: Expr, startMs: Long,
       endMs: Long, stepMs: Long): PromMatrix = {
     import graft.tsdb.Expr._
-    val e = db.engine()
-    def groupCols(g: Grouping): Seq[String] =
-      if (g.by) g.labels else Seq("labels")
-    def grouped(g: Grouping, inner: Expr,
-        post: DataFrame => DataFrame = identity): PromMatrix = {
-      val cols = groupCols(g)
-      val df = post(e.queryRangeBy(inner, g, startMs, endMs, stepMs))
-      PromMatrix(cols, canonical = !g.by, df.orderBy(
-        (cols :+ "timestamp").map(col): _*).collect())
-    }
-    def ungrouped(inner: Expr): PromMatrix =
-      PromMatrix(Nil, canonical = false,
-        e.queryRange(inner, startMs, endMs, stepMs).output
-          .orderBy("timestamp").collect())
     // the aggregate-child shape rule: the bridge aggregates a selector
     // (the per-step window statistic) or an already-windowed inner (one
     // pooled series). Inside a composition only the kinds whose
@@ -459,12 +450,11 @@ object Web {
     // aggregate, or binary/set/instant math over aggregates, literals
     // welcome (the ratio panel `sum by (s) (err) / sum by (s) (req)`,
     // the masking idiom `sum by (s) (m) unless (count by (s) (m) > 1)`);
-    // None when none does (the plain sliding paths own it). An
-    // aggregate-free side (literals always; any sliding shape beside an
-    // UNGROUPED aggregate) rides along raw; grouped × raw rejects — the
-    // raw side has no group key in the pooled-series model (the engine
-    // would evaluate it per group, which Prometheus' label matching
-    // does not)
+    // None when none does. An aggregate-free side (literals always; any
+    // sliding shape beside an UNGROUPED aggregate) rides along raw;
+    // grouped × raw rejects — the raw side has no group key in the
+    // pooled-series model (the engine would evaluate it per group,
+    // which Prometheus' label matching does not)
     def aggGrouping(e: Expr, composed: Boolean): Option[Option[Grouping]] =
       e match {
         case Aggregate(k, c, g) => checkAgg(k, c, composed); Some(g)
@@ -497,17 +487,10 @@ object Web {
         case InstantFn(_, c, _) => aggGrouping(c, composed = true)
         case _ => None
       }
-    // topk/bottomk k over the bridge: ALWAYS the engine's k-subplan
-    // path (scalarK — literals take its no-Spark-job fast arm), so
-    // every topk surface interprets the same k text identically
-    // (round-and-clamp; a local v.toInt here would truncate 2.9 → 2
-    // while the engine rounds → 3, review r13)
-    def kOf(kExpr: Expr): Int = e.scalarK(kExpr, startMs, endMs)
     // count_values anywhere in a sampler child: the sampler picks
     // SERIES and count_values keys its output series by VALUE text, so
-    // routing it to the grouped evaluator would fail deep with a
-    // generic sliding-grouping error (advice r14) — reject up front
-    // with guidance instead
+    // the engine would fail deep with a generic sliding-grouping error
+    // (advice r14) — reject up front with guidance instead
     def containsCountValues(e0: Expr): Boolean = e0 match {
       case Aggregate(AggCountValues(_), _, _) => true
       case Aggregate(_, c, _) => containsCountValues(c)
@@ -518,158 +501,51 @@ object Web {
       case SubqueryMatrix(c, _, _, _) => containsCountValues(c)
       case _ => false
     }
-    // per-step sampling dispatch shared by ranged limitk/limit_ratio
-    // (round 15): matched grouped binaries route through the engine's
-    // matched twins (series key = many-side groups + carried labels);
-    // any other child whose grouping resolves (the engine's
-    // innerGrouping walk) samples its grouped matrix through the
-    // queryRangeBy scope — grouped aggregates, grouped binaries and
-    // set-ops, exactly the inners the engine surface already takes
-    def rangedSample(child: Expr, op: String, hint: String)(
-        groupedInner: Grouping => DataFrame,
-        matchedInner: (Expr, Grouping, Expr, Grouping, BinKind,
-          VectorMatch) => DataFrame): PromMatrix =
+    def checkMatched(sides: Aggregate*): Unit =
+      sides.foreach(a => checkAgg(a.kind, a.child, composed = true))
+    // ranged limitk/limit_ratio sample the series of a matched or
+    // grouped child
+    def checkSampled(child: Expr, op: String, hint: String): Unit =
       child match {
-        case BinaryOp(kind, l @ Aggregate(lk, lc, Some(gl)),
-            r @ Aggregate(rk, rc, Some(gr)), Some(vm)) =>
-          val cols = e.matchedSeriesCols(gl, gr, vm)
-          val manyBy = (if (vm.card == OneToMany) gr else gl).by
-          checkAgg(lk, lc, composed = true)
-          checkAgg(rk, rc, composed = true)
-          val df = matchedInner(l, gl, r, gr, kind, vm)
-          PromMatrix(cols, canonical = !manyBy, df.orderBy(
-            (cols :+ "timestamp").map(col): _*).collect())
-        case _ =>
-          require(!containsCountValues(child),
-            s"ranged $op samples SERIES — count_values keys series by " +
-              s"VALUE text; aggregate into label groups instead: $hint")
-          e.innerGrouping(child) match {
-            case Some(g) =>
-              val cols = groupCols(g)
-              val df = groupedInner(g)
-              PromMatrix(cols, canonical = !g.by, df.orderBy(
-                (cols :+ "timestamp").map(col): _*).collect())
-            case None => throw new IllegalArgumentException(
-              s"ranged $op samples SERIES — aggregate into groups " +
-                s"first: $hint; got child: $child")
-          }
+        case BinaryOp(_, l @ Aggregate(_, _, Some(_)),
+            r @ Aggregate(_, _, Some(_)), Some(_)) => checkMatched(l, r)
+        case _ => require(!containsCountValues(child),
+          s"ranged $op samples SERIES — count_values keys series by " +
+            s"VALUE text; aggregate into label groups instead: $hint")
       }
-    ast match {
-      // MATCHED grouped composition — the share-of-parent panel:
-      // `sum by (a,b) (x) / on (a) group_left sum by (a) (y)` at every
-      // step. Each side evaluates under its own grouping and the engine
-      // joins per (match key, step); the series labels are the MANY
-      // side's groups plus any carried labels
-      case BinaryOp(kind, l @ Aggregate(lk, lc, Some(gl)),
-          r @ Aggregate(rk, rc, Some(gr)), Some(vm)) =>
-        // `without` sides ride the canonical labels column (round 13 —
-        // the engine re-opens the match-key values); the serializer
-        // decodes the canonical group identity back into metric fields
+    def lastSample(sel: Selector): Expr =
+      RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil)
+    val tree = ast match {
+      case BinaryOp(_, l @ Aggregate(_, _, Some(gl)),
+          r @ Aggregate(_, _, Some(gr)), Some(vm)) =>
         val manyG = if (vm.card == OneToMany) gr else gl
         require(manyG.by || vm.carry.isEmpty,
           "label-carry onto a without-grouped many side is not " +
             "supported over the API bridge — the carried column has " +
             "no metric field inside the canonical identity; re-group " +
             "the many side with `by`")
-        checkAgg(lk, lc, composed = true)
-        checkAgg(rk, rc, composed = true)
-        val df = e.queryRangeByMatched(l, gl, r, gr,
-          kind, vm, startMs, endMs, stepMs)
-        val cols =
-          (if (manyG.by) manyG.labels else Seq("labels")) ++ vm.carry
-        PromMatrix(cols, canonical = !manyG.by, df.orderBy(
-          (cols :+ "timestamp").map(col): _*).collect())
-      case Aggregate(AggCountValues(label), inner, None) =>
-        // count_values over the bridge (round 13; general inners round
-        // 14): value-bucketed per-step counts — a bare selector counts
-        // raw samples in their unique step windows; any sliding-
-        // evaluable inner (rate, instant math, grouped aggregates)
-        // counts the derived series per step. One scan either way,
-        // series keyed by the VALUE label
-        val df = e.countValuesRange(label, inner, startMs, endMs, stepMs)
-        PromMatrix(Seq(label), canonical = false, df.orderBy(
-          col(label), col("timestamp")).collect())
-      case GetK(top, kExpr, agg @ Aggregate(_, _, Some(gr)), None) =>
-        // topk(k, sum by (u) (...)): the k best groups at each step —
-        // the engine's per-step rank (queryRangeGetK, round 13; its
-        // sliding Aggregate arm does the windowed/pooled translation);
-        // k literal or scalar expression
-        val cols = groupCols(gr)
-        val df = e.queryRangeGetK(top, kExpr, agg, gr,
-          startMs, endMs, stepMs)
-        PromMatrix(cols, canonical = !gr.by, df.orderBy(
-          (cols :+ "timestamp").map(col): _*).collect())
-      case GetK(_, kExpr, child, Some(g)) =>
-        // `topk by (s) (k, m)` — WITHIN-group top-k: each group is ONE
-        // pooled series, so k ≥ 1 is the identity (exactly Prometheus'
-        // one-series-group answer) and k = 0 empties; contrast with
-        // `topk(k, sum by (s) (m))`, the ACROSS-groups ranking above
-        val k = kOf(kExpr)
-        val inner = child match {
-          case SlidingShape(rf) => rf
-          case sel: Selector =>
-            RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil)
-          case other => throw new IllegalArgumentException(
-            s"the API bridge ranks a selector or a range function over " +
-              s"a matrix selector, got: $other")
-        }
-        grouped(g, inner, df => if (k <= 0) df.limit(0) else df)
-      case LimitK(kExpr, inner) =>
-        // limitk(k, <grouped matrix>) at every step — the engine's
-        // per-step md5-order sampling (round 14; general inners +
-        // matched composition round 15): same matrix shape as ranged
-        // topk, the sampling order instead of the value one. Any child
-        // whose grouping resolves routes (grouped aggregates, grouped
-        // binaries/set-ops — the queryRangeBy scope); matched grouped
-        // binaries ride the matched twin
-        rangedSample(inner, "limitk", "limitk(3, sum by (s) (m))")(
-          g => e.queryRangeLimitK(kExpr, inner, g, startMs, endMs, stepMs),
-          (l, gl, r, gr, kind, vm) => e.queryRangeLimitKMatched(
-            kExpr, l, gl, r, gr, kind, vm, startMs, endMs, stepMs))
-      case LimitRatio(ratio, inner) =>
-        rangedSample(inner, "limit_ratio",
-          "limit_ratio(0.5, sum by (s) (m))")(
-          g => e.queryRangeLimitRatio(ratio, inner, g, startMs, endMs,
-            stepMs),
-          (l, gl, r, gr, kind, vm) => e.queryRangeLimitRatioMatched(
-            ratio, l, gl, r, gr, kind, vm, startMs, endMs, stepMs))
-      case sel: Selector =>
-        ungrouped(RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil))
-      case rf @ RangeFn(_, SubqueryMatrix(inner, _, _, _), _) =>
-        // sliding subquery — routes GROUPED when the inner tree holds
-        // a by/without aggregate (`quantile_over_time(0.9, sum by (s)
-        // (rate(m[5m]))[1h:5m])`): the group columns become the series
-        // labels. DELIBERATE asymmetry with aggGrouping's grouped × raw
-        // rejection: inside a subquery the grouping DISTRIBUTES over
-        // the whole inner — an aggregate-free operand beside a grouped
-        // aggregate evaluates per group (the ts101 convention:
-        // `sum_over_time(a[1d]) / sum_over_time(b[1d])` by user groups
-        // BOTH sides)
-        e.innerGrouping(inner) match {
-          case Some(g) => grouped(g, rf)
-          case None => ungrouped(rf)
-        }
-      case other =>
-        // the engine takes the already-parsed AST — parsing once
-        // guarantees the validated and evaluated trees agree
-        aggGrouping(other, composed = false).flatten match {
-          case Some(g) => grouped(g, other)
-          case None => ungrouped(other)
-        }
+        checkMatched(l, r)
+        ast
+      case GetK(top, kExpr, child, g @ Some(_)) => child match {
+        case SlidingShape(_) => ast
+        case sel: Selector => GetK(top, kExpr, lastSample(sel), g)
+        case other => throw new IllegalArgumentException(
+          s"the API bridge ranks a selector or a range function over " +
+            s"a matrix selector, got: $other")
+      }
+      case LimitK(_, child) =>
+        checkSampled(child, "limitk", "limitk(3, sum by (s) (m))"); ast
+      case LimitRatio(_, child) =>
+        checkSampled(child, "limit_ratio",
+          "limit_ratio(0.5, sum by (s) (m))"); ast
+      case Aggregate(AggCountValues(_), _, None) => ast
+      case sel: Selector => lastSample(sel)
+      case other => aggGrouping(other, composed = false); other
     }
+    val r = db.engine().queryRange(tree, startMs, endMs, stepMs)
+    PromMatrix(r.seriesKey, r.canonical, r.output.orderBy(
+      (r.seriesKey :+ "timestamp").map(col): _*).collect())
   }
-
-  /** Write one series' metric object: plain `by` labels map 1:1; the
-    * `without` canonical column (k=v,k=v, LabelCodec-escaped) re-opens
-    * into per-label fields — "" is the empty label set.
-    */
-  private def putMetric(metric: ObjectNode, labels: Seq[String],
-      canonical: Boolean, key: Seq[String]): Unit =
-    if (canonical)
-      LabelCodec.decodeLabels(key.headOption.getOrElse(""),
-          s"without group '${key.headOption.getOrElse("")}'")
-        .toSeq.sortBy(_._1).foreach { case (k, v) => metric.put(k, v) }
-    else labels.zip(key).foreach { case (l, v) => metric.put(l, v) }
 
   private[tools] def handlePromQueryRange(spark: SparkSession,
       params: Map[String, List[String]], dbRoot: Option[String]): String = {
@@ -691,12 +567,11 @@ object Web {
     var curKey: Seq[String] = null
     var curValues: com.fasterxml.jackson.databind.node.ArrayNode = null
     m.rows.foreach { r =>
-      val key = m.labels.indices.map(i =>
-        if (r.isNullAt(i)) "" else r.get(i).toString)
+      val key = m.key(r)
       if (curKey == null || key != curKey) {
         curKey = key
         val series = result.addObject()
-        putMetric(series.putObject("metric"), m.labels, m.canonical, key)
+        m.putMetric(series.putObject("metric"), key)
         curValues = series.putArray("values")
       }
       val n = m.labels.size
@@ -794,9 +669,7 @@ object Web {
     m.rows.foreach { r =>
       if (!r.isNullAt(n + 1)) {
         val series = result.addObject()
-        val key = m.labels.indices.map(i =>
-          if (r.isNullAt(i)) "" else r.get(i).toString)
-        putMetric(series.putObject("metric"), m.labels, m.canonical, key)
+        m.putMetric(series.putObject("metric"), m.key(r))
         val pair = series.putArray("value")
         pair.add(r.getLong(n) / 1000.0)
         pair.add(r.getDouble(n + 1).toString)
@@ -900,6 +773,31 @@ object Web {
     checkUnderRoot(path, dbRoot)
   }
 
+  /** A grouped `/query` result (by/without, whole-range or per step) as
+    * a `groups` array of {label..: value.., [timestamp: t,] value: n}
+    * objects, ordered by every column — the reference endpoint has no
+    * analogue (its planner drops grouping). A NULL value cell (Spark's
+    * divide-by-zero rule for a zero-denominator group) renders as JSON
+    * null, not NPE.
+    */
+  private def groupsJson(mapper: ObjectMapper, df: DataFrame): String = {
+    val cols = df.columns
+    val root = mapper.createObjectNode()
+    root.put("value_type", "Float64")
+    val arr = root.putArray("groups")
+    df.orderBy(cols.map(col): _*).collect().foreach { r =>
+      val o = arr.addObject()
+      cols.init.zipWithIndex.foreach {
+        case ("timestamp", i) => o.put("timestamp", r.getLong(i))
+        case (c, i) =>
+          if (r.isNullAt(i)) o.putNull(c) else o.put(c, r.get(i).toString)
+      }
+      if (r.isNullAt(cols.length - 1)) o.putNull("value")
+      else o.put("value", r.getDouble(cols.length - 1))
+    }
+    mapper.writeValueAsString(root)
+  }
+
   private[tools] def handleQuery(spark: SparkSession, requestJson: String,
       dbRoot: Option[String] = None): String = {
     val mapper = new ObjectMapper()
@@ -929,51 +827,15 @@ object Web {
             "\"by\" requires \"step\" (it selects grouped query_range " +
               "evaluation); for whole-range grouped queries put the " +
               "by-clause in the PromQL text instead"))
-        val df = db.queryRangeBy(promql,
-          graft.tsdb.Expr.Grouping(by = true, ls), start, end, step)
-        val cols = df.columns
-        val root = mapper.createObjectNode()
-        root.put("value_type", "Float64")
-        val arr = root.putArray("groups")
-        df.orderBy(cols.map(org.apache.spark.sql.functions.col): _*)
-          .collect().foreach { r =>
-            val o = arr.addObject()
-            cols.dropRight(2).zipWithIndex.foreach { case (c, i) =>
-              if (r.isNullAt(i)) o.putNull(c) else o.put(c, r.get(i).toString)
-            }
-            o.put("timestamp", r.getLong(cols.length - 2))
-            if (r.isNullAt(cols.length - 1)) o.putNull("value")
-            else o.put("value", r.getDouble(cols.length - 1))
-          }
-        return mapper.writeValueAsString(root)
+        return groupsJson(mapper, db.queryRangeBy(promql,
+          graft.tsdb.Expr.Grouping(by = true, ls), start, end, step))
     }
 
     val res = field("step").map(_.asLong()) match {
       case Some(step) => db.queryRange(promql, start, end, step)
       case None => db.query(promql, start, end)
     }
-    if (res.grouped) {
-      // by/without result: a `groups` array of {label..: value..,
-      // value: n} objects, ordered by the group keys — the reference
-      // endpoint has no analogue (its planner drops grouping)
-      val cols = res.output.columns
-      val root = mapper.createObjectNode()
-      root.put("value_type", "Float64")
-      val arr = root.putArray("groups")
-      res.output
-        .orderBy(cols.map(org.apache.spark.sql.functions.col): _*)
-        .collect().foreach { r =>
-          val o = arr.addObject()
-          cols.init.zipWithIndex.foreach { case (c, i) =>
-            if (r.isNullAt(i)) o.putNull(c) else o.put(c, r.get(i).toString)
-          }
-          // NULL value cell (Spark's divide-by-zero rule for a
-          // zero-denominator group) renders as JSON null, not NPE
-          if (r.isNullAt(cols.length - 1)) o.putNull("value")
-          else o.put("value", r.getDouble(cols.length - 1))
-        }
-      return mapper.writeValueAsString(root)
-    }
+    if (res.grouped) return groupsJson(mapper, res.output)
     val rows =
       if (res.isScalar) res.output.collect().map(r => (None: Option[Long], r.get(0)))
       else res.output.orderBy("timestamp").collect()

@@ -58,7 +58,20 @@ final case class TsdbResult(df: DataFrame, isScalar: Boolean, vtype: VType,
       * reject such operands loudly: cross-joining k scalar rows would
       * silently duplicate every group row (ADVICE r10).
       */
-    multiRow: Boolean = false) {
+    multiRow: Boolean = false,
+    /** A [[TsdbEngine.queryRange]] result's series key: the columns
+      * naming one series — a `by` grouping's labels, the canonical
+      * `labels` column of a `without` grouping, a matched composition's
+      * many-side groups plus carried labels, count_values' value label —
+      * empty for the one pooled series. Rows are (key..., timestamp,
+      * value).
+      */
+    seriesKey: Seq[String] = Nil,
+    /** true when `seriesKey` is the one-column canonical `without`
+      * encoding (`k=v,k=v`, LabelCodec-escaped) rather than plain label
+      * columns.
+      */
+    canonical: Boolean = false) {
   /** Output with reference type fidelity. Integer-typed streams compute
     * in LongType end-to-end (exact at any i64 magnitude, not just below
     * 2^53) except through V2V interpolation, which goes via f64 exactly
@@ -120,21 +133,91 @@ final class TsdbEngine(
     * each over the SLIDING lookback window (T - range, T] — the HTTP
     * query_range contract, vs [[query]]'s one-pass tumbling shape. The
     * selector scan extends `range` behind startMs so every window sees
-    * its full lookback. This is [[queryRangeBy]]'s sliding recursion
-    * run with NO group columns (the whole selection is one pooled
-    * series); see [[sliding]] for the accepted shapes.
+    * its full lookback. See the AST form for the accepted roots.
     */
   def queryRange(promql: String, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult =
     queryRange(PromParser.parse(promql), startMs, endMs, stepMs)
 
-  /** [[queryRange]] from a pre-parsed AST — the entry the Prometheus
-    * API bridge uses after dispatching on the query shape.
+  /** [[queryRange]] from a pre-parsed AST — the ONE query_range entry:
+    * the Prometheus API bridge hands it every root it serves, and the
+    * result names its series (`seriesKey`, `canonical`). Accepted roots:
+    *
+    *  - anything [[sliding]] evaluates, under the grouping the tree
+    *    carries ([[rootGrouping]]) — one pooled series when it has none,
+    *    one series per group otherwise,
+    *  - MATCHED composition of two grouped aggregates, `sum by (a, b)
+    *    (x) / on (a) group_left sum by (a) (y)` ([[matchedRange]]),
+    *  - `topk`/`bottomk(k, <grouped or matched>)`: the k best series AT
+    *    EACH STEP, ties to the series key ascending; `topk by (g) (k,
+    *    <sliding>)` ranks within each group, which is ONE pooled series
+    *    here — the identity for k ≥ 1, empty for k = 0,
+    *  - `limitk` / `limit_ratio` over a grouped or matched child: the
+    *    md5-order sample taken per step,
+    *  - `count_values("l", inner)` ([[countValuesRange]]).
+    *
+    * k follows GetK's k-subplan contract ([[scalarK]]). Ranks and
+    * samplers partition on the step timestamp over the series-count ×
+    * step-count frame — never a global sort; each selector scans once.
     */
   def queryRange(e: Expr, startMs: Long, endMs: Long,
-      stepMs: Long): TsdbResult =
-    TsdbResult(sliding(e, None, startMs, endMs, stepMs),
-      isScalar = false, VType.F64)
+      stepMs: Long): TsdbResult = {
+    def k(kExpr: Expr) = scalarK(kExpr, startMs, endMs)
+    def grouped(inner: Expr, g: Grouping) =
+      rangedResult(queryRangeBy(inner, g, startMs, endMs, stepMs),
+        groupProjection(g)._1, canonical = !g.by)
+    // a sampler's child: a matched composition, or any tree whose
+    // grouping resolves — one series per group
+    def series(child: Expr, op: String, example: String): TsdbResult =
+      child match {
+        case BinaryOp(kind, l @ Aggregate(_, _, Some(gl)),
+            r @ Aggregate(_, _, Some(gr)), Some(m)) =>
+          matchedRange(kind, l, gl, r, gr, m, startMs, endMs, stepMs)
+        case _ => innerGrouping(child) match {
+          case Some(g) =>
+            requireOneInnerGrouping(child, s"ranged $op")
+            grouped(child, g)
+          case None => throw new IllegalArgumentException(
+            s"ranged $op samples SERIES — aggregate into groups " +
+              s"first: $example; got child: $child")
+        }
+      }
+    e match {
+      case BinaryOp(kind, l @ Aggregate(_, _, Some(gl)),
+          r @ Aggregate(_, _, Some(gr)), Some(m)) =>
+        matchedRange(kind, l, gl, r, gr, m, startMs, endMs, stepMs)
+      case Aggregate(AggCountValues(label), inner, None) =>
+        rangedResult(countValuesRange(label, inner, startMs, endMs, stepMs),
+          Seq(label), canonical = false)
+      case GetK(_, kExpr, child, Some(g)) =>
+        val r = grouped(child, g)
+        if (k(kExpr) <= 0) r.copy(df = r.df.limit(0)) else r
+      case GetK(top, kExpr, child, None) if innerGrouping(child).nonEmpty =>
+        val s = series(child, "topk/bottomk", "topk(3, sum by (s) (m))")
+        s.copy(df = perStepFirstK(s.df,
+          (if (top) col("value").desc else col("value").asc) +:
+            s.seriesKey.map(col(_).asc), k(kExpr)))
+      case LimitK(kExpr, child) =>
+        val s = series(child, "limitk", "limitk(3, sum by (s) (m))")
+        s.copy(df = perStepFirstK(s.df, sampleOrderFor(s.seriesKey),
+          k(kExpr)))
+      case LimitRatio(r, child) =>
+        val s = series(child, "limit_ratio",
+          "limit_ratio(0.5, sum by (s) (m))")
+        s.copy(df = perStepLimitRatio(s.df, s.seriesKey, r))
+      case _ => rootGrouping(e) match {
+        case Some(g) => grouped(e, g)
+        case None => rangedResult(sliding(e, None, startMs, endMs, stepMs),
+          Nil, canonical = false)
+      }
+    }
+  }
+
+  private def rangedResult(df: DataFrame, seriesKey: Seq[String],
+      canonical: Boolean): TsdbResult =
+    TsdbResult(df, isScalar = false, VType.F64,
+      grouped = seriesKey.nonEmpty, seriesKey = seriesKey,
+      canonical = canonical)
 
   /** The deterministic sampling order limitk/limit_ratio share: md5
     * over the group key (group values joined with a 0x01 separator;
@@ -175,47 +258,42 @@ final class TsdbEngine(
     * 1-row collect (the reference evaluates the k subplan first,
     * get_k.rs:77-79 — k is ONE number, so the single-value collect
     * mirrors that), round, clamp at 0. Shared by eval's GetK arm and
-    * the Prometheus API bridge's topk/bottomk dispatch (which accepts
-    * `topk(scalar(count(m)), ...)` through exactly this path).
+    * [[queryRange]]'s samplers, so every surface reads the same k text
+    * identically (`topk(scalar(count(m)), ...)` included).
     */
-  def scalarK(kExpr: Expr, startMs: Long, endMs: Long): Int = kExpr match {
+  private def scalarK(kExpr: Expr, startMs: Long, endMs: Long): Int = kExpr match {
     case NumberLit(v) =>
       // literal k: same round-and-clamp as the evaluated path, no
       // 1-row Spark job for the common `topk(3, ...)` case. Clamp
       // BOTH ends — a bare Long.toInt would wrap topk(3e9, ...) to a
       // negative k and silently empty the result (review r13)
       math.min(Int.MaxValue.toLong, math.max(0L, math.round(v))).toInt
-    case _ => scalarKEval(kExpr, startMs, endMs)
+    case _ =>
+      val kRes = eval(kExpr, startMs, endMs)
+      require(kRes.isScalar && !kRes.grouped,
+        "topk/bottomk k-parameter must be a single scalar")
+      val kRows = kRes.df.limit(1).collect()
+      if (kRows.isEmpty) 0
+      else math.min(Int.MaxValue.toLong, math.max(0L, kRows(0).get(0) match {
+        case d: java.lang.Double => math.round(d.doubleValue())
+        case l: java.lang.Long => l.longValue()
+        case other => other.toString.toLong
+      })).toInt
   }
 
-  private def scalarKEval(kExpr: Expr, startMs: Long, endMs: Long): Int = {
-    val kRes = eval(kExpr, startMs, endMs)
-    require(kRes.isScalar && !kRes.grouped,
-      "topk/bottomk k-parameter must be a single scalar")
-    val kRows = kRes.df.limit(1).collect()
-    if (kRows.isEmpty) 0
-    else math.min(Int.MaxValue.toLong, math.max(0L, kRows(0).get(0) match {
-      case d: java.lang.Double => math.round(d.doubleValue())
-      case l: java.lang.Long => l.longValue()
-      case other => other.toString.toLong
-    })).toInt
-  }
-
-  /** count_values' query_range twin (the API bridge's per-step model).
+  /** count_values' query_range root ([[queryRange]]'s per-step model).
     * A bare Selector counts raw SAMPLES: ONE scan over
     * (start - step, end], each sample assigned to its UNIQUE step
     * window (step-sized lookbacks tile the range), then
-    * per-(step, value-string) counts. Any other inner the sliding
-    * machinery accepts (round 14 — rate/instant-fn/arithmetic trees,
-    * grouped aggregates) counts the derived SERIES at each step:
-    * grouped inners evaluate through [[queryRangeBy]] (one series per
-    * group per step), groupless ones through the pooled sliding
-    * evaluator. Either way the value renders through the same string
+    * per-(step, value-string) counts. Any other inner [[queryRange]]
+    * accepts (rate/instant-fn/arithmetic trees, grouped aggregates)
+    * counts the derived SERIES at each step — one per group, or the one
+    * pooled series. Either way the value renders through the same string
     * cast the whole-range AggCountValues arm uses, so the surfaces
     * agree on label text; output stays (label, timestamp, value),
     * group-count × step-count bounded, no per-step rescan.
     */
-  def countValuesRange(label: String, inner: Expr, startMs: Long,
+  private def countValuesRange(label: String, inner: Expr, startMs: Long,
       endMs: Long, stepMs: Long): DataFrame = {
     requireValueLabel(label, Nil)
     val perStep = inner match {
@@ -228,14 +306,8 @@ final class TsdbEngine(
           .where(col("timestamp") >= startMs && col("timestamp") <= endMs)
       case _ =>
         requireOneInnerGrouping(inner, "count_values over a derived inner")
-        innerGrouping(inner) match {
-          case Some(g) =>
-            queryRangeBy(inner, g, startMs, endMs, stepMs)
-              .select(col("timestamp"), col("value"))
-          case None =>
-            sliding(inner, None, startMs, endMs, stepMs)
-              .select(col("timestamp"), col("value"))
-        }
+        queryRange(inner, startMs, endMs, stepMs).df
+          .select(col("timestamp"), col("value"))
     }
     perStep
       .groupBy(col("value").cast("string").as(label), col("timestamp"))
@@ -246,10 +318,10 @@ final class TsdbEngine(
   /** The grouping an inner tree evaluates under: the first by/without
     * clause found walking the composition — the convention that an
     * aggregate-free operand beside a grouped aggregate evaluates per
-    * group. The API bridge routes sliding subqueries and ranged
-    * samplers by this same walk.
+    * group. [[queryRange]] routes subqueries and ranged samplers by
+    * this same walk.
     */
-  private[graft] def innerGrouping(e: Expr): Option[Grouping] = e match {
+  private def innerGrouping(e: Expr): Option[Grouping] = e match {
     case Aggregate(_, c, g) => g.orElse(innerGrouping(c))
     case BinaryOp(_, l, r, _) =>
       innerGrouping(l).orElse(innerGrouping(r))
@@ -257,6 +329,23 @@ final class TsdbEngine(
     case RangeFn(_, c, _) => innerGrouping(c)
     case SubqueryMatrix(c, _, _, _) => innerGrouping(c)
     case _ => None
+  }
+
+  /** The grouping a [[queryRange]] root evaluates under: the clause of
+    * the aggregates at the tree's composition level (through binary/set
+    * composition and instant math) — a groupless aggregate there pools
+    * the whole selection, so it does not take a clause from below it —
+    * otherwise the inner tree's ([[innerGrouping]]: a subquery's
+    * grouping distributes over its composition).
+    */
+  private def rootGrouping(e: Expr): Option[Grouping] = {
+    def composed(e: Expr): Option[Option[Grouping]] = e match {
+      case Aggregate(_, _, g) => Some(g)
+      case BinaryOp(_, l, r, None) => composed(l).orElse(composed(r))
+      case InstantFn(_, c, _) => composed(c)
+      case _ => None
+    }
+    composed(e).getOrElse(innerGrouping(e))
   }
 
   /** EVERY grouping an inner tree carries at its composition level —
@@ -1218,7 +1307,7 @@ final class TsdbEngine(
 
   /** The on/ignoring + group_left/group_right join core, shared by the
     * whole-range matched binary and the SLIDING matched composition
-    * ([[queryRangeByMatched]] — `timeKey = true` adds the step
+    * ([[matchedRange]] — `timeKey = true` adds the step
     * timestamp to the join key and the carry-uniqueness fold, so
     * matching is per (match key, step)). Acceptance rules are
     * identical; both operand frames are post-aggregation
@@ -1509,7 +1598,9 @@ final class TsdbEngine(
 
   /** Grouped aggregates — the `sum by (label)` extension the reference
     * parses but ignores (SURVEY §2 row 7): per-label-value whole-range
-    * aggregation over a selector. Returns (group, value) rows.
+    * aggregation over a selector, through the grouped surface's
+    * [[aggColumn]] (every kind but count_values, which rejects). Returns
+    * (group, value) rows.
     */
   def aggregateBy(selector: String, kind: AggKind, labelKey: String,
       startMs: Long, endMs: Long): DataFrame = {
@@ -1517,17 +1608,16 @@ final class TsdbEngine(
       case s: Selector => s
       case other => throw new IllegalArgumentException(s"not a selector: $other")
     }
-    val rows = select(sel, startMs, endMs,
+    val aggCol = kind match {
+      case AggCountValues(_) => throw new IllegalArgumentException(
+        "aggregateBy has no count_values form — its output is keyed by " +
+          "value text, not by the label; use query(\"count_values(...)\")")
+      case k => aggColumn(k)
+    }
+    select(sel, startMs, endMs,
         Seq(element_at(col("labels"), labelKey).as("group")))
       .withColumn("value", col("value").cast("double"))
-    val aggCol = kind match {
-      case AggSum => sum(col("value"))
-      case AggCount => count(lit(1)).cast("double")
-      case AggAvg => avg(col("value"))
-      case AggMin => min(col("value"))
-      case AggMax => max(col("value"))
-    }
-    rows.groupBy("group").agg(aggCol.as("value"))
+      .groupBy("group").agg(aggCol.as("value"))
   }
 
   /** Grouped range functions — the `by (label)` extension applied to the
@@ -1587,9 +1677,9 @@ final class TsdbEngine(
       startMs: Long, endMs: Long, stepMs: Long): DataFrame =
     queryRangeBy(PromParser.parse(promql), grouping, startMs, endMs, stepMs)
 
-  /** [[queryRangeBy]] from a pre-parsed AST (the Prometheus API
-    * bridge's grouped arm): the [[sliding]] recursion keyed by the
-    * grouping's columns. Emits (group cols..., timestamp, value).
+  /** [[queryRangeBy]] from a pre-parsed AST: the [[sliding]] recursion
+    * keyed by the grouping's columns — [[queryRange]]'s grouped roots
+    * run through it. Emits (group cols..., timestamp, value).
     */
   def queryRangeBy(parsed: Expr, grouping: Grouping,
       startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
@@ -1599,8 +1689,8 @@ final class TsdbEngine(
   }
 
   /** The ONE sliding per-step evaluator: [[queryRange]] runs it with no
-    * grouping (the whole selection is one pooled series),
-    * [[queryRangeBy]] with one pooled series per label group, and every
+    * grouping (the whole selection is one pooled series) or, through
+    * [[queryRangeBy]], with one pooled series per label group, and every
     * subquery `expr[range:step]` evaluates its inner through it. Frames
     * are (group cols..., timestamp = eval time, value); ungrouped, the
     * group columns are empty and every key below degenerates to the
@@ -1781,105 +1871,65 @@ final class TsdbEngine(
   /** MATCHED grouped sliding composition — the share-of-parent panel
     * OVER TIME: `sum by (a, b) (x) / on (a) group_left sum by (a) (y)`
     * at every step. Each side evaluates through the grouped sliding
-    * recursion with ITS OWN grouping (`by` or, since round 13,
-    * `without` — the canonical string re-opens into the match-key
-    * values), and the sides join per (match key, step)
-    * under exactly [[groupedBinaryMatched]]'s acceptance rules
-    * (one-to-one needs both sides keyed by the match labels;
-    * many-to-one needs the 'one' side keyed exactly by them [∪ carry],
-    * carry-tuple uniqueness enforced per (key, step) on the
+    * recursion with ITS OWN grouping (`by` or `without` — the canonical
+    * string re-opens into the match-key values), and the sides join per
+    * (match key, step) under exactly [[groupedBinaryMatched]]'s
+    * acceptance rules (one-to-one needs both sides keyed by the match
+    * labels; many-to-one needs the 'one' side keyed exactly by them
+    * [∪ carry], carry-tuple uniqueness enforced per (key, step) on the
     * executors). Both frames are group-count × step-count sized; the
-    * 'one' side broadcasts. Output: (many-side groups..., carried
-    * labels..., timestamp, value).
+    * 'one' side broadcasts. Series key: the many side's groups
+    * (canonical `labels` when `without`-grouped) plus carried labels.
     */
-  def queryRangeByMatched(lhs: Expr, gl: Grouping, rhs: Expr,
-      gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    // `without` sides (round 13) ride the canonical `labels` column;
-    // matchedGroupedJoin re-opens the match-key values from it
-    def sideCols(g: Grouping): Seq[String] =
-      if (g.by) g.labels else Seq("labels")
-    matchedGroupedJoin(kind,
-      queryRangeBy(lhs, gl, startMs, endMs, stepMs), sideCols(gl),
-      queryRangeBy(rhs, gr, startMs, endMs, stepMs), sideCols(gr),
-      m, timeKey = true)
+  private def matchedRange(kind: BinKind, lhs: Expr, gl: Grouping,
+      rhs: Expr, gr: Grouping, m: VectorMatch,
+      startMs: Long, endMs: Long, stepMs: Long): TsdbResult = {
+    def side(e: Expr, g: Grouping) =
+      (queryRangeBy(e, g, startMs, endMs, stepMs), groupProjection(g)._1)
+    val (lDf, lCols) = side(lhs, gl)
+    val (rDf, rCols) = side(rhs, gr)
+    val manyG = if (m.card == OneToMany) gr else gl
+    rangedResult(
+      matchedGroupedJoin(kind, lDf, lCols, rDf, rCols, m, timeKey = true),
+      groupProjection(manyG)._1 ++ m.carry, canonical = !manyG.by)
   }
 
-  /** topk/bottomk OVER TIME — the dashboard "top k series per step"
-    * panel the API bridge already serves, engine-native (round 13):
-    * the grouped sliding evaluation of `inner` (any shape
-    * [[queryRangeBy]] accepts — range fns, aggregate inners, binary/
-    * set composition), then a per-STEP rank keeping the k best groups
-    * at each step (ties break on the group key ascending, the grouped
-    * whole-range rule). The rank partitions on the step timestamp over
-    * the group-count × step-count derived frame — bounded, never a
-    * global sort; each selector scans once. k follows GetK's k-subplan
-    * contract ([[scalarK]] — a 1-row whole-range collect, the
-    * reference's own k shape). Emits (group cols..., timestamp, value).
+  /** topk/bottomk OVER TIME with an explicit grouping: the k best
+    * groups of `inner` evaluated under `grouping` at each step —
+    * [[queryRange]] of `topk(k, sum by (g) (inner))`, the `sum by`
+    * being the identity over a grouped sliding inner (each group is one
+    * pooled series). Emits (group cols..., timestamp, value).
     */
   def queryRangeGetK(top: Boolean, kExpr: Expr, inner: Expr,
       grouping: Grouping, startMs: Long, endMs: Long,
-      stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged topk/bottomk")
-    val k = scalarK(kExpr, startMs, endMs)
-    val df = queryRangeBy(inner, grouping, startMs, endMs, stepMs)
-    if (k <= 0) return df.limit(0)
-    val (gNames, _) = groupProjection(grouping)
-    val rank = row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("timestamp"))
-        .orderBy((if (top) col("value").desc else col("value").asc) +:
-          gNames.map(col(_).asc): _*))
-    df.withColumn("_rk", rank).where(col("_rk") <= k).drop("_rk")
-  }
+      stepMs: Long): DataFrame =
+    queryRange(GetK(top, kExpr, Aggregate(AggSum, inner, Some(grouping)),
+      None), startMs, endMs, stepMs).df
 
-  /** limitk's query_range twin: per-step deterministic series
-    * sampling — the whole-range LimitK arm's md5-order rule applied
-    * PER STEP, so each evaluation samples among the series present at
-    * that step (the Prometheus per-evaluation contract: a group with
-    * no samples in a step's window doesn't occupy one of the k slots
-    * there). The rank window partitions on the step timestamp —
-    * group-count-sized frames over the post-aggregation matrix, never
-    * a global sort (the [[queryRangeGetK]] shape with the sampling
-    * order instead of the value order).
+  /** Keep each step's first k series in `order` — the per-step rank of
+    * ranged topk/bottomk (value order) and limitk (md5 sampling order,
+    * so each evaluation samples among the series present at that step:
+    * a series with no samples in a step's window does not occupy one
+    * of the k slots there). The rank window partitions on the step
+    * timestamp over the series-count × step-count frame — never a
+    * global sort.
     */
-  def queryRangeLimitK(kExpr: Expr, inner: Expr, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged limitk")
-    val k = scalarK(kExpr, startMs, endMs)
-    perStepLimitK(queryRangeBy(inner, grouping, startMs, endMs, stepMs),
-      groupProjection(grouping)._1, k)
-  }
-
-  /** The per-step md5 pick itself, over an explicit series-column
-    * list — shared by the grouped sampler above and the MATCHED twins
-    * below (whose series key is the many side's groups plus any
-    * carried labels, not a single grouping's projection).
-    */
-  private def perStepLimitK(df: DataFrame, seriesCols: Seq[String],
+  private def perStepFirstK(df: DataFrame, order: Seq[Column],
       k: Int): DataFrame = {
     if (k <= 0) return df.limit(0)
     val rank = row_number().over(
       org.apache.spark.sql.expressions.Window
-        .partitionBy(col("timestamp"))
-        .orderBy(sampleOrderFor(seriesCols): _*))
+        .partitionBy(col("timestamp")).orderBy(order: _*))
     df.withColumn("_rk", rank).where(col("_rk") <= k).drop("_rk")
   }
 
-  /** limit_ratio's query_range twin — per-step rank AND per-step
-    * count over the same timestamp-partitioned window; r >= 0 keeps
-    * the first round(r*n_step) series in md5 order, r < 0 the exact
-    * complement (rk > round((1+r)*n_step)), so limit_ratio(r) and
+  /** limit_ratio per step — per-step rank AND per-step count over the
+    * same timestamp-partitioned window; r >= 0 keeps the first
+    * round(r*n_step) series in md5 order, r < 0 the exact complement
+    * (rk > round((1+r)*n_step)), so limit_ratio(r) and
     * limit_ratio(r-1) partition each step exactly — including steps
     * where n varies because a series has no samples in the window.
     */
-  def queryRangeLimitRatio(r: Double, inner: Expr, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged limit_ratio")
-    perStepLimitRatio(queryRangeBy(inner, grouping, startMs, endMs, stepMs),
-      groupProjection(grouping)._1, r)
-  }
-
   private def perStepLimitRatio(df: DataFrame, seriesCols: Seq[String],
       r: Double): DataFrame = {
     require(r >= -1 && r <= 1, s"limit_ratio takes r in [-1, 1], got $r")
@@ -1893,42 +1943,6 @@ final class TsdbEngine(
       if (r >= 0) ranked.where(col("_rk") <= round(lit(r) * col("_n")))
       else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
     kept.drop("_rk", "_n")
-  }
-
-  /** Per-step sampling over a MATCHED grouped composition (round 15):
-    * `limitk(3, sum by (a, b) (x) / on (a) group_left sum by (a)
-    * (y))` — the share-of-parent matrix from [[queryRangeByMatched]]
-    * sampled per step. The series identity (and so the md5 key) is the
-    * many side's group columns plus any carried labels — for a
-    * `without`-grouped many side that is the canonical labels string,
-    * which is itself deterministic text, so the pick stays
-    * oracle-checkable. Same frame bounds as the matched query_range
-    * surface; the rank window adds one timestamp-partitioned pass.
-    */
-  def queryRangeLimitKMatched(kExpr: Expr, lhs: Expr, gl: Grouping,
-      rhs: Expr, gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    val k = scalarK(kExpr, startMs, endMs)
-    perStepLimitK(
-      queryRangeByMatched(lhs, gl, rhs, gr, kind, m, startMs, endMs, stepMs),
-      matchedSeriesCols(gl, gr, m), k)
-  }
-
-  def queryRangeLimitRatioMatched(r: Double, lhs: Expr, gl: Grouping,
-      rhs: Expr, gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    perStepLimitRatio(
-      queryRangeByMatched(lhs, gl, rhs, gr, kind, m, startMs, endMs, stepMs),
-      matchedSeriesCols(gl, gr, m), r)
-
-  /** The series columns a matched composition emits: the many side's
-    * groups (canonical `labels` when `without`-grouped) plus carried
-    * labels — the key the bridge serializes and the samplers rank on.
-    */
-  def matchedSeriesCols(gl: Grouping, gr: Grouping,
-      m: VectorMatch): Seq[String] = {
-    val manyG = if (m.card == OneToMany) gr else gl
-    (if (manyG.by) manyG.labels else Seq("labels")) ++ m.carry
   }
 
   /** GROUPED SUBQUERY — the outer range function folding a grouped

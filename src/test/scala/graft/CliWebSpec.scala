@@ -643,6 +643,74 @@ class CliWebSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("http: the query_range bridge serializes exactly the engine's queryRange") {
+    val db = freshDb()
+    val store = new graft.tsdb.GraftDb(spark, db)
+    // three x series (u, a, b) with distinct counter slopes, two y (a)
+    for ((sel, vs) <- Seq(
+        """x{u="p", a="1", b="1"}""" -> Seq(1d, 2d, 3d, 4d),
+        """x{u="q", a="1", b="2"}""" -> Seq(2d, 5d, 8d, 11d),
+        """x{u="r", a="2", b="1"}""" -> Seq(10d, 12d, 14d, 16d),
+        """y{a="1"}""" -> Seq(1d, 1d, 1d, 1d),
+        """y{a="2"}""" -> Seq(2d, 2d, 2d, 2d))) {
+      store.createStream(sel, graft.tsdb.VType.F64)
+      val ins = store.inserter(sel)
+      vs.zipWithIndex.foreach { case (v, i) => ins.insert(10L * (i + 1), v) }
+      ins.flush()
+    }
+    val server = Web.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val client = HttpClient.newHttpClient()
+      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+      type Series = Map[Map[String, String], Seq[(Double, String)]]
+      def bridge(q: String): Series = {
+        val resp = client.send(HttpRequest.newBuilder(URI.create(
+          s"http://localhost:$port/api/v1/query_range?path=${enc(db)}" +
+            s"&query=${enc(q)}&start=0.02&end=0.04&step=10ms")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200, s"$q: ${resp.body()}")
+        val result = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(resp.body()).get("data").get("result")
+        import scala.jdk.CollectionConverters._
+        result.elements().asScala.map { s =>
+          s.get("metric").properties().asScala
+            .map(f => f.getKey -> f.getValue.asText()).toMap ->
+            s.get("values").elements().asScala
+              .map(p => (p.get(0).asDouble(), p.get(1).asText())).toSeq
+        }.toMap
+      }
+      // the engine's answer, keyed by its series-key columns
+      def engine(q: String): Series = {
+        val r = store.engine().queryRange(
+          graft.tsdb.PromParser.parse(q), 20L, 40L, 10L)
+        assert(!r.canonical && r.seriesKey.nonEmpty, q)
+        val n = r.seriesKey.size
+        r.output.collect().filterNot(_.isNullAt(n + 1)).toSeq
+          .groupBy(row => r.seriesKey.indices.map(i =>
+            r.seriesKey(i) -> Option(row.get(i)).fold("")(_.toString)).toMap)
+          .map { case (k, rows) => k -> rows.map(row =>
+            (row.getLong(n) / 1000.0, row.getDouble(n + 1).toString))
+            .sortBy(_._1) }
+      }
+      val sumRate = "sum by (u) (rate(x[5m]))"
+      for ((q, asEngine) <- Seq(
+          s"topk(2, $sumRate)" -> s"topk(2, $sumRate)",
+          s"limitk(1, $sumRate)" -> s"limitk(1, $sumRate)",
+          s"limit_ratio(0.5, $sumRate)" -> s"limit_ratio(0.5, $sumRate)",
+          "sum by (a,b) (x) / on (a) group_left sum by (a) (y)" ->
+            "sum by (a,b) (x) / on (a) group_left sum by (a) (y)",
+          """count_values("v", x)""" -> """count_values("v", x)""",
+          // the bridge's one rewrite: a bare selector is the last sample
+          // per step within a step-sized lookback
+          "topk by (u) (1, x)" -> "topk by (u) (1, last_over_time(x[10ms]))")) {
+        val want = engine(asEngine)
+        assert(want.nonEmpty, q)
+        assert(bridge(q) == want, q)
+      }
+    } finally server.stop(0)
+  }
+
   test("cli + http: record-grouped preserves labels per group") {
     val db = freshDb()
     assert(cli(db, "create-stream", """req{service = "web"}""", "f64")._1 == 0)

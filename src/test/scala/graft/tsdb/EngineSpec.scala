@@ -732,13 +732,10 @@ class EngineSpec extends AnyFunSuite {
     // MATCHED sliding composition: share-of-dc per (service, step),
     // `/ on (dc) group_left` — the one side keyed exactly by dc; the
     // null dc group (cli) matches itself through the null-safe key
-    val matched = e.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "service")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc")),
-      Expr.Div, Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne),
-      20, 40, 20)
+    val matched = e.queryRange(PromParser.parse(
+      "sum by (dc, service) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left sum by (dc) (sum_over_time(req[20ms]))"),
+      20, 40, 20).df
     assert(matched.columns.toSeq == Seq("dc", "service", "timestamp", "value"))
     val mrows = matched.collect().toSet[Row].map(r =>
       (Option(r.getString(0)), r.getString(1), r.getLong(2), r.getDouble(3)))
@@ -750,13 +747,10 @@ class EngineSpec extends AnyFunSuite {
     // many side without(service) leaves {dc} groups — dividing by the
     // by(dc) one side is the identity ratio at every step, and the
     // output keeps the canonical `labels` group identity
-    val mw = e.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = false, List("service")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc")),
-      Expr.Div, Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne),
-      20, 40, 20)
+    val mw = e.queryRange(PromParser.parse(
+      "sum without (service) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left sum by (dc) (sum_over_time(req[20ms]))"),
+      20, 40, 20).df
     assert(mw.columns.toSeq == Seq("labels", "timestamp", "value"))
     val mwRows = mw.collect().toSet[Row].map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -772,14 +766,10 @@ class EngineSpec extends AnyFunSuite {
       new TsdbEngine(spark, longDf(rows),
         new StreamCatalog(Seq(StreamDef("req", Map.empty, VType.F64))))
     }
-    val carried = e3.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "svc")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "tier")),
-      Expr.Div,
-      Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne, List("tier")),
-      20, 20, 20)
+    val carried = e3.queryRange(PromParser.parse(
+      "sum by (dc, svc) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left (tier) sum by (dc, tier) (sum_over_time(req[20ms]))"),
+      20, 20, 20).df
     assert(carried.columns.toSeq ==
       Seq("dc", "svc", "tier", "timestamp", "value"))
     val crows = carried.collect().toSet[Row].map(r =>
@@ -797,14 +787,10 @@ class EngineSpec extends AnyFunSuite {
       new TsdbEngine(spark, longDf(rows),
         new StreamCatalog(Seq(StreamDef("req", Map.empty, VType.F64))))
     }
-    val dup = intercept[Exception](e4.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "svc")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "tier")),
-      Expr.Div,
-      Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne, List("tier")),
-      20, 20, 20).collect())
+    val dup = intercept[Exception](e4.queryRange(PromParser.parse(
+      "sum by (dc, svc) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left (tier) sum by (dc, tier) (sum_over_time(req[20ms]))"),
+      20, 20, 20).df.collect())
     assert(dup.getMessage.contains("not unique"), dup.getMessage)
     // set operators take vector operands, not scalars — in the grouped
     // AND ungrouped sliding evaluators (the NumberLit arithmetic arms
@@ -1444,13 +1430,23 @@ class EngineSpec extends AnyFunSuite {
     assert(g.toSeq == Seq(("mobile", 29L, 27.0), ("mobile", 51L, 100.0),
       ("web", 29L, 92.0), ("web", 51L, 71.0)))
     // ...and a MISMATCHED grouping rejects (one group key per sliding
-    // evaluation), as does a grouped aggregate in an ungrouped eval
+    // evaluation)
     intercept[IllegalArgumentException](h.queryRangeBy(
       "sum by (other) (http_requests_total)",
       Expr.Grouping(by = true, List("service")), 29, 51, 22).collect())
-    intercept[IllegalArgumentException](
-      h.queryRange("sum by (service) (http_requests_total)", 29, 51, 22)
-        .df.collect())
+    // queryRange resolves a grouped root's grouping from the tree: the
+    // same series, keyed by the by-labels
+    val root = h.queryRange("sum by (service) (http_requests_total)",
+      29, 51, 22)
+    assert(root.seriesKey == Seq("service") && !root.canonical)
+    assert(root.df.orderBy("service", "timestamp").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      g.toSeq)
+    // a grouped aggregate beside a groupless one still rejects: the
+    // groupless root pools everything into one series
+    intercept[IllegalArgumentException](h.queryRange(
+      "sum(http_requests_total) / sum by (service) (http_requests_total)",
+      29, 51, 22).df.collect())
   }
 
   test("unsupported forms are rejected") {

@@ -301,6 +301,20 @@ class RangeFnSpec extends AnyFunSuite {
       ("a", 20L, 20.0), ("a", 30L, 20.0))) // only t=15 survives
   }
 
+  test("aggregateBy answers every aggregation but count_values") {
+    val rows = Seq(
+      ("m", Map("u" -> "a"), 5L, 1d), ("m", Map("u" -> "a"), 15L, 5d),
+      ("m", Map("u" -> "b"), 5L, 7d))
+    val e = new TsdbEngine(spark, longDf(rows),
+      new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
+    // population stddev: a {1, 5} → 2, b {7} → 0
+    val sd = e.aggregateBy("m", Expr.AggStddev, "u", 0L, 100L)
+      .collect().map(r => (r.getString(0), r.getDouble(1)))
+    assert(sd.toSet === Set(("a", 2.0), ("b", 0.0)))
+    intercept[IllegalArgumentException](
+      e.aggregateBy("m", Expr.AggCountValues("v"), "u", 0L, 100L))
+  }
+
   test("subquery: outer range fn over the inner sliding series") {
     // inner sum_over_time(ctr[30ms]) at 10ms steps over [0,100] is the
     // sliding fixture below: {10:10,20:30,30:35,40:32,50:12,60:7,70:3,
