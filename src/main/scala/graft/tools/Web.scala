@@ -2,6 +2,10 @@ package graft.tools
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.locks.{Lock, ReentrantReadWriteLock}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -28,6 +32,18 @@ import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, VType}
   *
   * One JVM/SparkSession serves many databases: `path` picks the GraftDb
   * root per request, like the reference's per-request Connection.
+  *
+  * Threading: requests run on a fixed pool of daemon worker threads, one
+  * per Spark core (`defaultParallelism`), so queries overlap and a client
+  * stalled mid-body holds one worker, not the server. Each server keeps
+  * one [[GraftDb]] per store (keyed by its real path) and one read/write
+  * lock beside it: the reads (`/query`, `/api/v1/query_range`,
+  * `/api/v1/query`, `/api/v1/labels`, `/api/v1/label/…/values`,
+  * `/api/v1/series`) share the read lock; the writes (`/compact`,
+  * `/expire`, `/delete-stream`, `/record`) take the write lock, so no
+  * query in this process overlaps a rewrite of the store it reads.
+  * `/health` and buildinfo take no lock. Writers in other processes
+  * (the CLI beside the server) are not ordered by these locks.
   */
 object Web {
 
@@ -56,6 +72,7 @@ object Web {
       dbRoot: Option[String] = None): HttpServer = {
     val server = HttpServer.create(
       new InetSocketAddress(java.net.InetAddress.getLoopbackAddress, port), 0)
+    val stores = new Stores(spark, dbRoot)
     server.createContext("/health", (ex: HttpExchange) => {
       ex.sendResponseHeaders(200, -1)
       ex.close()
@@ -78,7 +95,7 @@ object Web {
         ex.getResponseBody.write(bytes)
         ex.close()
       })
-    jsonContext("/query")(handleQuery(spark, _, dbRoot))
+    jsonContext("/query")(handleQuery(stores, _))
     // maintenance (beyond the reference backend): merge flush deltas.
     // POST {"path", "max_files"?} -> {"compacted_partitions": n}.
     // Deletes files, so it is gated on an explicit allowlist — a server
@@ -87,7 +104,7 @@ object Web {
       if (dbRoot.isEmpty)
         throw new IllegalArgumentException(
           "compaction disabled: server started without a db root allowlist")
-      handleCompact(spark, body, dbRoot)
+      handleCompact(stores, body)
     }
     // retention: POST {"path", "before_ms"} -> {"expired_partitions": n}.
     // Same delete-gated allowlist rule as /compact.
@@ -95,7 +112,7 @@ object Web {
       if (dbRoot.isEmpty)
         throw new IllegalArgumentException(
           "retention disabled: server started without a db root allowlist")
-      handleExpire(spark, body, dbRoot)
+      handleExpire(stores, body)
     }
     // stream deletion: POST {"path", "selector"} -> {"deleted": selector}.
     // Same delete-gated allowlist rule as /compact and /expire.
@@ -103,7 +120,7 @@ object Web {
       if (dbRoot.isEmpty)
         throw new IllegalArgumentException(
           "deletion disabled: server started without a db root allowlist")
-      handleDeleteStream(spark, body, dbRoot)
+      handleDeleteStream(stores, body)
     }
     // recording rule: POST {"path", "target", "query", "start", "end",
     // "step"?} -> {"recorded": n, "target": t}. Writes to the store, so
@@ -112,7 +129,7 @@ object Web {
       if (dbRoot.isEmpty)
         throw new IllegalArgumentException(
           "recording disabled: server started without a db root allowlist")
-      handleRecord(spark, body, dbRoot)
+      handleRecord(stores, body)
     }
     // Prometheus HTTP API bridge: GET or form-encoded POST, success/
     // error envelopes and matrix/vector/scalar result shapes per the
@@ -142,9 +159,8 @@ object Web {
     def promContext(path: String)(
         handler: Map[String, List[String]] => String): Unit =
       promRawContext(path)((_, params) => handler(params))
-    promContext("/api/v1/query_range")(
-      handlePromQueryRange(spark, _, dbRoot))
-    promContext("/api/v1/query")(handlePromInstant(spark, _, dbRoot))
+    promContext("/api/v1/query_range")(handlePromQueryRange(stores, _))
+    promContext("/api/v1/query")(handlePromInstant(stores, _))
     // dashboards probe buildinfo before their first query; the version
     // names the API LEVEL the bridge speaks (Prometheus-compatible
     // stores answer the same way), application names what it really is
@@ -154,7 +170,7 @@ object Web {
     }
     // metadata endpoints (dashboard autocomplete): pure catalog reads
     promContext("/api/v1/labels") { params =>
-      val names = promDb(spark, params, dbRoot).labelNames()
+      val names = stores.read(promPath(params, dbRoot))(_.labelNames())
       promStrings("__name__" +: names)
     }
     // /api/v1/label/<name>/values — the label name rides in the path
@@ -163,10 +179,10 @@ object Web {
       // api, v1, label, <name>, values
       require(segs.length == 5 && segs(4) == "values", s"bad path: $path")
       val label = java.net.URLDecoder.decode(segs(3), "UTF-8")
-      val db = promDb(spark, params, dbRoot)
-      val values =
+      val values = stores.read(promPath(params, dbRoot)) { db =>
         if (label == "__name__") db.streams().map(_.name).distinct.sorted
         else db.labelValues(label)
+      }
       promStrings(values)
     }
     // /api/v1/series?match[]=<selector> — the catalog streams a
@@ -176,7 +192,7 @@ object Web {
       val sels = params.getOrElse("match[]", params.getOrElse("match", Nil))
       if (sels.isEmpty)
         throw new IllegalArgumentException("missing parameter: match[]")
-      val db = promDb(spark, params, dbRoot)
+      val path = promPath(params, dbRoot)
       // Prometheus allows a fully nameless `{job="x"}` here (the
       // catalog is the only thing scanned): parseSeriesSelector is the
       // parser's OWN nameless-permitting entry point — it injects the
@@ -184,7 +200,7 @@ object Web {
       // CONFLICT, so no error-message sniffing or query re-splicing
       // (which a reworded parser error would silently break).
       // Multiple match[] selectors UNION, as in Prometheus.
-      val cat = new graft.tsdb.StreamCatalog(db.streams())
+      val cat = new graft.tsdb.StreamCatalog(stores.read(path)(_.streams()))
       val hits = sels.flatMap { sel =>
         val p = PromParser.parseSeriesSelector(sel)
         cat.resolve(p.name, p.matchers)
@@ -200,9 +216,45 @@ object Web {
       }
       mapper.writeValueAsString(root)
     }
-    server.setExecutor(null)
+    // one worker per Spark core; idle workers exit after 30 s, and as
+    // daemons they never hold the JVM open after the server stops
+    val workers = spark.sparkContext.defaultParallelism
+    val prefix = s"graft-web-${server.getAddress.getPort}-"
+    val named = new AtomicInteger()
+    val pool = new ThreadPoolExecutor(workers, workers, 30, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, prefix + named.incrementAndGet())
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    server.setExecutor(pool)
     server.start()
     server
+  }
+
+  /** One server's open stores: per store real path, one shared
+    * [[GraftDb]] and the lock that orders this server's requests on it
+    * — reads share it, writes ([[write]]) hold it alone.
+    */
+  private[tools] final class Stores(val spark: SparkSession,
+      val dbRoot: Option[String]) {
+    private final class Store(val db: GraftDb) {
+      val lock = new ReentrantReadWriteLock()
+    }
+    private val open = new ConcurrentHashMap[Path, Store]()
+
+    def read[A](path: Path)(f: GraftDb => A): A = locked(path, _.readLock())(f)
+    def write[A](path: Path)(f: GraftDb => A): A = locked(path, _.writeLock())(f)
+
+    private def locked[A](path: Path, pick: ReentrantReadWriteLock => Lock)(
+        f: GraftDb => A): A = {
+      val store = open.computeIfAbsent(path,
+        p => new Store(new GraftDb(spark, p.toString)))
+      val lock = pick(store.lock)
+      lock.lock()
+      try f(store.db) finally lock.unlock()
+    }
   }
 
   // ---- Prometheus API bridge ----
@@ -308,56 +360,57 @@ object Web {
     params.get(k).flatMap(_.headOption).getOrElse(
       throw new IllegalArgumentException(s"missing parameter: $k"))
 
-  /** Reject `path` unless it resolves under the configured db root —
-    * the ONE containment check every endpoint shares (a copy per call
-    * site is how a symlink-hardening fix misses one). Resolution is
-    * REAL (symlinks followed on the deepest existing prefix, the
-    * not-yet-created remainder appended lexically), so a link planted
-    * inside the root pointing outside it cannot pass the containment
-    * test a purely lexical normalize would grant.
+  /** A request's store path, REAL (symlinks followed on the deepest
+    * existing prefix, the not-yet-created remainder appended
+    * lexically) — the key the server's [[Stores]] registry opens it
+    * under — rejected unless it resolves under the configured db root.
+    * The ONE containment check every endpoint shares (a copy per call
+    * site is how a symlink-hardening fix misses one); real resolution
+    * means a link planted inside the root pointing outside it cannot
+    * pass the containment test a purely lexical normalize would grant.
     */
-  private def checkUnderRoot(path: String, dbRoot: Option[String]): String = {
+  private def storePath(path: String, dbRoot: Option[String]): Path = {
+    val requested = realPath(Paths.get(path).toAbsolutePath)
     dbRoot.foreach { root =>
-      import java.nio.file.{Files, LinkOption, Path}
-      // Existence probes NOFOLLOW: a DANGLING symlink must count as the
-      // deepest existing component and get its target resolved by hand
-      // — Files.exists() follows links, so a dangling one would read as
-      // "not there yet", be re-appended lexically onto the real root,
-      // and pass containment while the filesystem later CREATES the
-      // store through the link, outside the root.
-      def real(p0: Path, depth: Int = 0): Path = {
-        require(depth < 40, s"symlink chain too deep resolving: $p0")
-        var existing = p0
-        var rest = List.empty[String]
-        while (existing != null &&
-            !Files.exists(existing, LinkOption.NOFOLLOW_LINKS)) {
-          rest = existing.getFileName.toString :: rest
-          existing = existing.getParent
-        }
-        if (existing == null)
-          rest.foldLeft(p0.getRoot)(_.resolve(_)).normalize
-        else if (Files.isSymbolicLink(existing)) {
-          val target = Files.readSymbolicLink(existing)
-          val resolved =
-            if (target.isAbsolute) target
-            else existing.getParent.resolve(target)
-          real(rest.foldLeft(resolved)(_.resolve(_)).normalize, depth + 1)
-        } else rest.foldLeft(existing.toRealPath())(_.resolve(_)).normalize
-      }
-      val canonical = real(java.nio.file.Paths.get(root).toAbsolutePath)
-      val requested = real(java.nio.file.Paths.get(path).toAbsolutePath)
-      if (!requested.startsWith(canonical))
+      if (!requested.startsWith(realPath(Paths.get(root).toAbsolutePath)))
         throw new IllegalArgumentException(s"path outside db root: $path")
     }
-    path
+    requested
   }
 
-  private def promDb(spark: SparkSession, params: Map[String, List[String]],
-      dbRoot: Option[String]): GraftDb = {
+  // Existence probes NOFOLLOW: a DANGLING symlink must count as the
+  // deepest existing component and get its target resolved by hand
+  // — Files.exists() follows links, so a dangling one would read as
+  // "not there yet", be re-appended lexically onto the real root,
+  // and pass containment while the filesystem later CREATES the
+  // store through the link, outside the root.
+  private def realPath(p0: Path, depth: Int = 0): Path = {
+    require(depth < 40, s"symlink chain too deep resolving: $p0")
+    var existing = p0
+    var rest = List.empty[String]
+    while (existing != null &&
+        !Files.exists(existing, LinkOption.NOFOLLOW_LINKS)) {
+      rest = existing.getFileName.toString :: rest
+      existing = existing.getParent
+    }
+    if (existing == null)
+      rest.foldLeft(p0.getRoot)(_.resolve(_)).normalize
+    else if (Files.isSymbolicLink(existing)) {
+      val target = Files.readSymbolicLink(existing)
+      val resolved =
+        if (target.isAbsolute) target
+        else existing.getParent.resolve(target)
+      realPath(rest.foldLeft(resolved)(_.resolve(_)).normalize, depth + 1)
+    } else rest.foldLeft(existing.toRealPath())(_.resolve(_)).normalize
+  }
+
+  /** The Prometheus API's `path` param (default: the db root itself). */
+  private def promPath(params: Map[String, List[String]],
+      dbRoot: Option[String]): Path = {
     val path = params.get("path").flatMap(_.headOption).orElse(dbRoot)
       .getOrElse(throw new IllegalArgumentException(
         "missing parameter: path (and no db root configured)"))
-    new GraftDb(spark, checkUnderRoot(path, dbRoot))
+    storePath(path, dbRoot)
   }
 
   /** One evaluated API-bridge query: the series-key column names, a
@@ -547,15 +600,15 @@ object Web {
       (r.seriesKey :+ "timestamp").map(col): _*).collect())
   }
 
-  private[tools] def handlePromQueryRange(spark: SparkSession,
-      params: Map[String, List[String]], dbRoot: Option[String]): String = {
-    val db = promDb(spark, params, dbRoot)
+  private[tools] def handlePromQueryRange(stores: Stores,
+      params: Map[String, List[String]]): String = {
+    val path = promPath(params, stores.dbRoot)
     val startMs = promTimeMs(params, "start")
     val endMs = promTimeMs(params, "end")
     val stepMs = promStepMs(promParam(params, "step"))
     require(endMs >= startMs, "end < start")
-    val m = promEval(db,
-      PromParser.parse(promParam(params, "query")), startMs, endMs, stepMs)
+    val ast = PromParser.parse(promParam(params, "query"))
+    val m = stores.read(path)(promEval(_, ast, startMs, endMs, stepMs))
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("status", "success")
@@ -587,9 +640,10 @@ object Web {
   /** Instant query: evaluated at `time` with a single sliding step —
     * resultType "vector", one {metric, value} per series.
     */
-  private[tools] def handlePromInstant(spark: SparkSession,
-      params: Map[String, List[String]], dbRoot: Option[String]): String = {
-    val db = promDb(spark, params, dbRoot)
+  private[tools] def handlePromInstant(stores: Stores,
+      params: Map[String, List[String]]): String = {
+    val spark = stores.spark
+    val path = promPath(params, stores.dbRoot)
     val timeMs = promTimeMs(params, "time")
     // the lookback for bare-selector / grouped-selector shapes
     // (Prometheus' 5m staleness default)
@@ -637,8 +691,8 @@ object Web {
             timeMs - lookbackMs + 1)
           case _ => (ast, timeMs - lookbackMs)
         }
-        val v = db.engine().query(expr, startAt, timeMs)
-          .output.collect().headOption.map(_.getDouble(0))
+        val v = stores.read(path)(_.engine().query(expr, startAt, timeMs)
+          .output.collect().headOption.map(_.getDouble(0)))
           .getOrElse(Double.NaN)
         return scalarBody(v)
       case Expr.VectorFn(child) if pureScalar(child) =>
@@ -658,7 +712,7 @@ object Web {
         return mapper.writeValueAsString(root)
       case _ => ()
     }
-    val m = promEval(db, ast, timeMs, timeMs, lookbackMs)
+    val m = stores.read(path)(promEval(_, ast, timeMs, timeMs, lookbackMs))
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("status", "success")
@@ -678,48 +732,47 @@ object Web {
     mapper.writeValueAsString(root)
   }
 
-  private[tools] def handleCompact(spark: SparkSession, requestJson: String,
-      dbRoot: Option[String]): String = {
+  private[tools] def handleCompact(stores: Stores,
+      requestJson: String): String = {
     val mapper = new ObjectMapper()
     val req = mapper.readTree(requestJson)
     def field(k: String) = Option(req.get(k)).filterNot(_.isNull)
-    val path = allowedPath(req, dbRoot)
+    val path = allowedPath(req, stores.dbRoot)
     val maxFiles = field("max_files").map(_.asInt()).getOrElse(4)
-    val n = new GraftDb(spark, path).compact(maxFiles)
+    val n = stores.write(path)(_.compact(maxFiles))
     val root = mapper.createObjectNode()
     root.put("compacted_partitions", n)
     mapper.writeValueAsString(root)
   }
 
-  private[tools] def handleDeleteStream(spark: SparkSession,
-      requestJson: String, dbRoot: Option[String]): String = {
+  private[tools] def handleDeleteStream(stores: Stores,
+      requestJson: String): String = {
     val mapper = new ObjectMapper()
     val req = mapper.readTree(requestJson)
-    val path = allowedPath(req, dbRoot)
+    val path = allowedPath(req, stores.dbRoot)
     val selector = Option(req.get("selector")).filterNot(_.isNull)
       .map(_.asText())
       .getOrElse(throw new IllegalArgumentException("missing field: selector"))
-    new GraftDb(spark, path).deleteStream(selector)
+    stores.write(path)(_.deleteStream(selector))
     val root = mapper.createObjectNode()
     root.put("deleted", selector)
     mapper.writeValueAsString(root)
   }
 
-  private[tools] def handleRecord(spark: SparkSession, requestJson: String,
-      dbRoot: Option[String]): String = {
+  private[tools] def handleRecord(stores: Stores,
+      requestJson: String): String = {
     val mapper = new ObjectMapper()
     val req = mapper.readTree(requestJson)
     def field(k: String) = Option(req.get(k)).filterNot(_.isNull)
     def need(k: String) = field(k).getOrElse(
       throw new IllegalArgumentException(s"missing field: $k"))
-    val path = allowedPath(req, dbRoot)
+    val path = allowedPath(req, stores.dbRoot)
     // optional "by" (array or comma-separated string, the /query
     // convention) selects the GROUPED rule — one derived stream per
     // group under `target`, labels preserved; it requires "step"
     // (grouped rules record the per-step series)
     val by = field("by").map(byLabels).getOrElse(Nil)
-    val db = new GraftDb(spark, path)
-    val n =
+    val n = stores.write(path) { db =>
       if (by.isEmpty)
         db.record(need("target").asText(), need("query").asText(),
           need("start").asLong(), need("end").asLong(),
@@ -731,21 +784,22 @@ object Web {
           throw new IllegalArgumentException(
             "\"by\" requires \"step\" (grouped rules record the " +
               "per-step series)")))
+    }
     val root = mapper.createObjectNode()
     root.put("recorded", n)
     root.put("target", need("target").asText())
     mapper.writeValueAsString(root)
   }
 
-  private[tools] def handleExpire(spark: SparkSession, requestJson: String,
-      dbRoot: Option[String]): String = {
+  private[tools] def handleExpire(stores: Stores,
+      requestJson: String): String = {
     val mapper = new ObjectMapper()
     val req = mapper.readTree(requestJson)
-    val path = allowedPath(req, dbRoot)
+    val path = allowedPath(req, stores.dbRoot)
     val beforeMs = Option(req.get("before_ms")).filterNot(_.isNull)
       .map(_.asLong())
       .getOrElse(throw new IllegalArgumentException("missing field: before_ms"))
-    val n = new GraftDb(spark, path).expire(beforeMs)
+    val n = stores.write(path)(_.expire(beforeMs))
     val root = mapper.createObjectNode()
     root.put("expired_partitions", n)
     mapper.writeValueAsString(root)
@@ -767,10 +821,10 @@ object Web {
     * network).
     */
   private def allowedPath(req: com.fasterxml.jackson.databind.JsonNode,
-      dbRoot: Option[String]): String = {
+      dbRoot: Option[String]): Path = {
     val path = Option(req.get("path")).filterNot(_.isNull).map(_.asText())
       .getOrElse(throw new IllegalArgumentException("missing field: path"))
-    checkUnderRoot(path, dbRoot)
+    storePath(path, dbRoot)
   }
 
   /** A grouped `/query` result (by/without, whole-range or per step) as
@@ -798,49 +852,52 @@ object Web {
     mapper.writeValueAsString(root)
   }
 
-  private[tools] def handleQuery(spark: SparkSession, requestJson: String,
-      dbRoot: Option[String] = None): String = {
+  private[tools] def handleQuery(stores: Stores, requestJson: String): String = {
     val mapper = new ObjectMapper()
     val req = mapper.readTree(requestJson)
     def field(k: String) = Option(req.get(k)).filterNot(_.isNull)
-    val path = allowedPath(req, dbRoot)
+    val path = allowedPath(req, stores.dbRoot)
     val promql = field("query").map(_.asText())
       .getOrElse(throw new IllegalArgumentException("missing field: query"))
     val start = field("start").map(_.asLong()).getOrElse(Cli.HackTimeStart)
     val end = field("end").map(_.asLong()).getOrElse(Cli.HackTimeEnd)
-
     // Optional "step" switches to Prometheus query_range evaluation:
     // the range function slides over (T - range, T] at each step instead
     // of the one-pass tumbling shape (GraftDb.queryRange contract).
-    val db = new GraftDb(spark, path)
-
+    val step = field("step").map(_.asLong())
     // Optional "by" (a JSON array of label names, or one comma-separated
     // string) makes the step query GROUPED — every label tuple's own
     // series at each step (GraftDb.queryRangeBy; the CLI's
     // `query-range-by` twin). Whole-range grouped queries don't need
     // the field: write the by-clause in the PromQL text.
-    field("by").map(byLabels) match {
-      case None => ()
-      case Some(ls) =>
-        val step = field("step").map(_.asLong()).getOrElse(
-          throw new IllegalArgumentException(
-            "\"by\" requires \"step\" (it selects grouped query_range " +
-              "evaluation); for whole-range grouped queries put the " +
-              "by-clause in the PromQL text instead"))
-        return groupsJson(mapper, db.queryRangeBy(promql,
-          graft.tsdb.Expr.Grouping(by = true, ls), start, end, step))
+    val by = field("by").map(byLabels)
+    if (by.nonEmpty && step.isEmpty)
+      throw new IllegalArgumentException(
+        "\"by\" requires \"step\" (it selects grouped query_range " +
+          "evaluation); for whole-range grouped queries put the " +
+          "by-clause in the PromQL text instead")
+    stores.read(path) { db =>
+      (by, step) match {
+        case (Some(ls), Some(st)) => groupsJson(mapper, db.queryRangeBy(
+          promql, graft.tsdb.Expr.Grouping(by = true, ls), start, end, st))
+        case _ =>
+          val res = step match {
+            case Some(st) => db.queryRange(promql, start, end, st)
+            case None => db.query(promql, start, end)
+          }
+          if (res.grouped) groupsJson(mapper, res.output)
+          else valuesJson(mapper, res)
+      }
     }
+  }
 
-    val res = field("step").map(_.asLong()) match {
-      case Some(step) => db.queryRange(promql, start, end, step)
-      case None => db.query(promql, start, end)
-    }
-    if (res.grouped) return groupsJson(mapper, res.output)
+  /** An ungrouped `/query` result in the reference endpoint's shape. */
+  private def valuesJson(mapper: ObjectMapper,
+      res: graft.tsdb.TsdbResult): String = {
     val rows =
       if (res.isScalar) res.output.collect().map(r => (None: Option[Long], r.get(0)))
       else res.output.orderBy("timestamp").collect()
         .map(r => (Some(r.getLong(0)), r.get(1)))
-
     val root = mapper.createObjectNode()
     root.put("value_type", res.vtype match {
       case VType.I64 => "Integer64"

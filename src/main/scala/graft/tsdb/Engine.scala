@@ -336,7 +336,8 @@ final class TsdbEngine(
     * composition and instant math) — a groupless aggregate there pools
     * the whole selection, so it does not take a clause from below it —
     * otherwise the inner tree's ([[innerGrouping]]: a subquery's
-    * grouping distributes over its composition).
+    * grouping distributes over its composition). `by ()` is no
+    * grouping: it pools like the groupless form.
     */
   private def rootGrouping(e: Expr): Option[Grouping] = {
     def composed(e: Expr): Option[Option[Grouping]] = e match {
@@ -345,8 +346,14 @@ final class TsdbEngine(
       case InstantFn(_, c, _) => composed(c)
       case _ => None
     }
-    composed(e).getOrElse(innerGrouping(e))
+    withoutEmptyBy(composed(e).getOrElse(innerGrouping(e)))
   }
+
+  /** An aggregate clause with `by ()` read as no clause: both pool the
+    * whole selection into one series.
+    */
+  private def withoutEmptyBy(g: Option[Grouping]): Option[Grouping] =
+    g.filterNot(x => x.by && x.labels.isEmpty)
 
   /** EVERY grouping an inner tree carries at its composition level —
     * the agreement check behind [[innerGrouping]]'s first-hit walk
@@ -1826,16 +1833,17 @@ final class TsdbEngine(
         // matters — group columns join by name); a groupless aggregate
         // rides a grouped evaluation too, because the evaluation already
         // pools each group's samples, which is exactly what the
-        // aggregate would do per group. A DIFFERENT grouping would need
-        // a second group-by level per step.
+        // aggregate would do per group, and so does `by ()`. A DIFFERENT
+        // grouping would need a second group-by level per step.
+        val clause = withoutEmptyBy(g)
         grouping match {
-          case None => g.foreach(x => throw new IllegalArgumentException(
+          case None => clause.foreach(x => throw new IllegalArgumentException(
             s"grouped aggregate (${if (x.by) "by" else "without"} " +
               s"${x.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
               "sliding evaluation — its group columns must appear in the " +
               "output; evaluate through queryRangeBy/subqueryRangeBy with " +
               "the same grouping"))
-          case Some(gr) => require(g.forall(x => x.by == gr.by &&
+          case Some(gr) => require(clause.forall(x => x.by == gr.by &&
               x.labels.toSet == gr.labels.toSet),
             s"aggregate grouping $g differs from the evaluation " +
               s"grouping $gr — sliding evaluation carries ONE " +

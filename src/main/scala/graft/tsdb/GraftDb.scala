@@ -49,13 +49,25 @@ final class GraftDb(
   // format's stats-aggregate coverage math in particular) must use the
   // TRUE width — a mis-declared one silently mis-scopes covered-bucket
   // answers — and a re-open with a different width would interleave
-  // incompatible bucket dirs. First open writes it; later opens verify.
+  // incompatible bucket dirs. First open writes it; every open verifies.
+  // The write is a temp file ATOMIC_MOVEd into place, so a concurrent
+  // opener (the CLI beside a server) never reads a half-written file.
   private val bucketMsFile = Paths.get(rootDir, "bucket_ms")
-  if (Files.exists(bucketMsFile)) {
+  if (!Files.exists(bucketMsFile)) {
+    val tmp = Files.createTempFile(Paths.get(rootDir), ".bucket_ms", ".tmp")
+    try {
+      Files.writeString(tmp, bucketMs.toString)
+      Files.move(tmp, bucketMsFile,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => ()
+    } finally Files.deleteIfExists(tmp)
+  }
+  locally {
     val stored = Files.readString(bucketMsFile).trim.toLong
     require(stored == bucketMs,
       s"store at $rootDir was written with bucketMs=$stored, got $bucketMs")
-  } else Files.writeString(bucketMsFile, bucketMs.toString)
+  }
 
   /** `value` is the f64 view; `lvalue` is the exact i64/u64 sidecar for
     * integer-typed streams (null for f64 streams) — the two views of the

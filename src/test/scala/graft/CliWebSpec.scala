@@ -1175,4 +1175,165 @@ class CliWebSpec extends AnyFunSuite {
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("/tmp/graft_other_root")))
     } finally server.stop(0)
   }
+
+  /** Three `x{u=…}` counter series of `n` samples `gapMs` apart, each
+    * flushed twice (odd samples, then even ones), so every partition
+    * the samples touch holds six delta files.
+    */
+  private def counterStore(db: String = freshDb(), n: Int = 6,
+      gapMs: Long = 10L): String = {
+    val store = new graft.tsdb.GraftDb(spark, db)
+    for ((u, slope) <- Seq("p" -> 1d, "q" -> 3d, "r" -> 5d)) {
+      val sel = s"""x{u="$u"}"""
+      store.createStream(sel, graft.tsdb.VType.F64)
+      val ins = store.inserter(sel)
+      for (parity <- Seq(1, 0)) {
+        (1 to n).filter(_ % 2 == parity)
+          .foreach(i => ins.insert(gapMs * i, slope * i))
+        ins.flush()
+      }
+    }
+    db
+  }
+
+  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+
+  /** GET /api/v1/query_range, by default over [20, 60] ms at a 10 ms step. */
+  private def queryRange(port: Int, db: String, q: String,
+      range: String = "start=0.02&end=0.06&step=10ms"): HttpResponse[String] =
+    HttpClient.newHttpClient().send(HttpRequest.newBuilder(URI.create(
+      s"http://localhost:$port/api/v1/query_range?path=${enc(db)}" +
+        s"&query=${enc(q)}&$range")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def postJson(port: Int, endpoint: String,
+      body: String): HttpResponse[String] =
+    HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"http://localhost:$port$endpoint"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  /** Run every thunk on its own thread, released together. */
+  private def together[A](thunks: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val fs = thunks.map(t => Future { go.await(); t() })
+      go.countDown()
+      Await.result(Future.sequence(fs), 60.seconds)
+    } finally pool.shutdown()
+  }
+
+  test("http: a by () root answers like the groupless aggregate") {
+    val db = counterStore()
+    val server = Web.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val byNone = queryRange(port, db, "sum by () (rate(x[5m]))")
+      val pooled = queryRange(port, db, "sum(rate(x[5m]))")
+      assert(byNone.statusCode() == 200, byNone.body())
+      assert(pooled.statusCode() == 200, pooled.body())
+      assert(pooled.body().contains("\"values\":[["), pooled.body())
+      assert(byNone.body() == pooled.body())
+    } finally server.stop(0)
+  }
+
+  test("http: a client stalled mid-body does not hold up /health") {
+    val server = Web.start(spark, 0)
+    val port = server.getAddress.getPort
+    val stalled = new java.net.Socket("localhost", port)
+    try {
+      // headers promise 1000 body bytes; only a few ever arrive
+      stalled.getOutputStream.write(("POST /query HTTP/1.1\r\n" +
+        s"Host: localhost:$port\r\nContent-Length: 1000\r\n\r\n{\"pa")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      stalled.getOutputStream.flush()
+      val health = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/health"))
+          .timeout(java.time.Duration.ofSeconds(3)).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(health.statusCode() == 200)
+    } finally {
+      stalled.close()
+      server.stop(0)
+    }
+  }
+
+  test("http: concurrent query_range requests answer exactly as serial ones") {
+    val db = counterStore()
+    val server = Web.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val shapes = Seq("rate(x{u=\"p\"}[30ms])", "sum by (u) (rate(x[30ms]))",
+        "topk(2, sum by (u) (rate(x[30ms])))", "sum(rate(x[30ms]))",
+        "bottomk(1, sum by (u) (rate(x[30ms])))", "rate(x{u=\"r\"}[20ms])",
+        "sum by (u) (sum_over_time(x[20ms]))", "topk(1, sum by (u) (x))")
+      val serial = shapes.map { q =>
+        val r = queryRange(port, db, q)
+        assert(r.statusCode() == 200, s"$q: ${r.body()}")
+        r.body()
+      }
+      val concurrent = together(shapes.map(q => () => queryRange(port, db, q)))
+      shapes.indices.foreach { i =>
+        assert(concurrent(i).statusCode() == 200, concurrent(i).body())
+        assert(concurrent(i).body() == serial(i), shapes(i))
+      }
+    } finally server.stop(0)
+  }
+
+  test("http: compact, record and query_range on one store overlap safely") {
+    // samples every 20 min over 12 h: compaction swaps 13 hourly
+    // partitions while the reads list and scan them
+    val (n, gapMs) = (36, 20L * 60 * 1000)
+    val range = "start=3600&end=43200&step=20m"
+    val root = Files.createTempDirectory("graft_cli_root")
+    val dbA = counterStore(root.resolve("a").toString, n, gapMs)
+    val dbB = counterStore(root.resolve("b").toString, n, gapMs)
+    val server = Web.start(spark, 0, Some(root.toString))
+    try {
+      val port = server.getAddress.getPort
+      val shapes = Seq("sum by (u) (rate(x[1h]))", "rate(x{u=\"q\"}[1h])",
+        "topk(2, sum by (u) (sum_over_time(x[40m])))")
+      def ok(r: HttpResponse[String]): String = {
+        assert(r.statusCode() == 200, r.body()); r.body()
+      }
+      // the two writes, then the reads, each yielding its body
+      def writes(db: String): Seq[() => String] = Seq(
+        () => ok(postJson(port, "/compact", s"""{"path": "$db", "max_files": 2}""")),
+        () => ok(postJson(port, "/record", s"""{"path": "$db",
+          | "target": "rec_x", "query": "sum(rate(x[1h]))",
+          | "start": 3600000, "end": 43200000, "step": 1200000}""".stripMargin)))
+      def read(db: String, q: String) = () => ok(queryRange(port, db, q, range))
+      val serial = (writes(dbB) ++ shapes.map(read(dbB, _))).map(_())
+      // every read four times, so reads stay in flight across the swaps
+      val concurrent = together(
+        writes(dbA) ++ shapes.flatMap(q => Seq.fill(4)(read(dbA, q))))
+      assert(serial.head == """{"compacted_partitions":13}""", serial.head)
+      assert(concurrent ==
+        serial.take(2) ++ serial.drop(2).flatMap(Seq.fill(4)(_)))
+      // the stores the two runs leave behind answer alike
+      for (q <- Seq(shapes.head, "rec_x"))
+        assert(read(dbA, q)() == read(dbB, q)(), q)
+    } finally server.stop(0)
+  }
+
+  test("http: the worker pool is daemon threads, so a stopped server holds no JVM open") {
+    val server = Web.start(spark, 0)
+    val prefix = s"graft-web-${server.getAddress.getPort}-"
+    try {
+      val port = server.getAddress.getPort
+      together(Seq.fill(4)(() => HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/health"))
+          .GET().build(), HttpResponse.BodyHandlers.ofString()).statusCode()))
+        .foreach(code => assert(code == 200))
+    } finally server.stop(0)
+    import scala.jdk.CollectionConverters._
+    val workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(prefix))
+    assert(workers.nonEmpty)
+    assert(workers.forall(_.isDaemon), workers.map(_.getName))
+  }
 }

@@ -41,6 +41,28 @@ class LibrarySpec extends AnyFunSuite {
     assert(desc.map(_.getAs[Long]("n_samples")).sum == 5)
   }
 
+  test("GraftDb: concurrent first opens of one store all see its bucket width") {
+    // the race is timing-dependent: before the atomic first write, an
+    // opener could read a half-written bucket_ms ("".toLong throws)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      for (_ <- 1 to 5) {
+        val dir = Files.createTempDirectory("graftdb_open").resolve("store")
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val opens = Seq.fill(8)(Future { go.await(); new GraftDb(spark, dir.toString) })
+        go.countDown()
+        Await.result(Future.sequence(opens), 30.seconds)
+        assert(Files.readString(dir.resolve("bucket_ms")) == "3600000")
+        import scala.jdk.CollectionConverters._
+        assert(scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+          .map(_.getFileName.toString).toList) == List("bucket_ms"))
+      }
+    } finally pool.shutdown()
+  }
+
   test("range fns via engine(serveFromStats): opt-in, equal when fresh, stale by contract") {
     val dir = Files.createTempDirectory("graftdb_rf").toString
     val db = new GraftDb(spark, dir, bucketMs = 10L)
