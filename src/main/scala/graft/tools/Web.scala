@@ -11,7 +11,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, VType}
 
@@ -44,6 +45,13 @@ import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, VType}
   * query in this process overlaps a rewrite of the store it reads.
   * `/health` and buildinfo take no lock. Writers in other processes
   * (the CLI beside the server) are not ordered by these locks.
+  *
+  * Serving session: each server runs all its Spark work on one session
+  * of its own ([[servingSession]]), the caller's settings at a shuffle
+  * width of [[ServingShufflePartitions]] (1); the caller's session is
+  * never changed. Answers are small (series × steps rows), so each is
+  * collected and sorted on the driver in Spark's order ([[seriesOrder]])
+  * instead of by a distributed `orderBy`.
   */
 object Web {
 
@@ -72,7 +80,7 @@ object Web {
       dbRoot: Option[String] = None): HttpServer = {
     val server = HttpServer.create(
       new InetSocketAddress(java.net.InetAddress.getLoopbackAddress, port), 0)
-    val stores = new Stores(spark, dbRoot)
+    val stores = new Stores(servingSession(spark), dbRoot)
     server.createContext("/health", (ex: HttpExchange) => {
       ex.sendResponseHeaders(200, -1)
       ex.close()
@@ -231,6 +239,28 @@ object Web {
     server.setExecutor(pool)
     server.start()
     server
+  }
+
+  /** The shuffle width of a server's session: one reduce task per
+    * request, since the worker pool already gives each request one core.
+    * Scan parallelism (one task per pruned file) is unchanged, and AQE
+    * stays on. A constant, not an option.
+    */
+  private val ServingShufflePartitions = 1L
+
+  /** A server's own session: `caller.newSession()` (same SparkContext,
+    * own SQLConf) carrying every entry of the caller's `conf.getAll`
+    * that is runtime-modifiable — the time zone, the parquet flags, AQE
+    * — with `spark.sql.shuffle.partitions` set to
+    * [[ServingShufflePartitions]]. The caller's session is untouched.
+    */
+  private[graft] def servingSession(caller: SparkSession): SparkSession = {
+    val s = caller.newSession()
+    caller.conf.getAll.foreach { case (k, v) =>
+      if (caller.conf.isModifiable(k)) s.conf.set(k, v)
+    }
+    s.conf.set("spark.sql.shuffle.partitions", ServingShufflePartitions)
+    s
   }
 
   /** One server's open stores: per store real path, one shared
@@ -452,8 +482,8 @@ object Web {
   /** Evaluate a Prometheus-API query: validate, rewrite a bare
     * selector, hand the tree to the engine's ONE query_range entry
     * ([[graft.tsdb.TsdbEngine.queryRange]], which evaluates every root
-    * shape and names the result's series), collect the rows in series
-    * order.
+    * shape and names the result's series), collect the rows and sort
+    * them in series order on the driver ([[seriesOrder]]).
     *
     *  - Validation: the bridge accepts less than the engine. One walk,
     *    run before evaluation, keeps its narrower rules as 400s: the
@@ -596,9 +626,36 @@ object Web {
       case other => aggGrouping(other, composed = false); other
     }
     val r = db.engine().queryRange(tree, startMs, endMs, stepMs)
-    PromMatrix(r.seriesKey, r.canonical, r.output.orderBy(
-      (r.seriesKey :+ "timestamp").map(col): _*).collect())
+    PromMatrix(r.seriesKey, r.canonical,
+      r.output.collect().sorted(seriesOrder(r.seriesKey.size)))
   }
+
+  /** Spark's ascending `orderBy(key..., timestamp)` over collected
+    * (key..., timestamp, value) rows: each key cell NULL first, then
+    * text by its UTF-8 bytes (`UTF8String`, as Spark compares strings
+    * — not `String.compareTo`'s UTF-16 order, which puts U+1F600 before
+    * U+FF61); then the timestamp.
+    */
+  private def seriesOrder(keys: Int): Ordering[Row] = new Ordering[Row] {
+    def compare(a: Row, b: Row): Int = {
+      var c = 0
+      var i = 0
+      while (c == 0 && i < keys) {
+        c = (a.isNullAt(i), b.isNullAt(i)) match {
+          case (true, true) => 0
+          case (true, false) => -1
+          case (false, true) => 1
+          case _ => UTF8String.fromString(a.getString(i))
+            .compareTo(UTF8String.fromString(b.getString(i)))
+        }
+        i += 1
+      }
+      if (c != 0) c else java.lang.Long.compare(a.getLong(keys), b.getLong(keys))
+    }
+  }
+
+  /** Prometheus' query_range resolution limit: (end − start) / step. */
+  private val MaxPointsPerSeries = 11000
 
   private[tools] def handlePromQueryRange(stores: Stores,
       params: Map[String, List[String]]): String = {
@@ -607,6 +664,11 @@ object Web {
     val endMs = promTimeMs(params, "end")
     val stepMs = promStepMs(promParam(params, "step"))
     require(endMs >= startMs, "end < start")
+    // Prometheus' own cap: a tiny step would explode every sample into
+    // up to ceil(range / step) + 1 windows
+    require((endMs - startMs) / stepMs <= MaxPointsPerSeries,
+      "exceeded maximum resolution of 11,000 points per timeseries. " +
+        "Try decreasing the query resolution (?step=XX)")
     val ast = PromParser.parse(promParam(params, "query"))
     val m = stores.read(path)(promEval(_, ast, startMs, endMs, stepMs))
     val mapper = new ObjectMapper()
@@ -896,7 +958,7 @@ object Web {
       res: graft.tsdb.TsdbResult): String = {
     val rows =
       if (res.isScalar) res.output.collect().map(r => (None: Option[Long], r.get(0)))
-      else res.output.orderBy("timestamp").collect()
+      else res.output.collect().sortBy(_.getLong(0))
         .map(r => (Some(r.getLong(0)), r.get(1)))
     val root = mapper.createObjectNode()
     root.put("value_type", res.vtype match {

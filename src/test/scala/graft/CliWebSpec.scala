@@ -1336,4 +1336,103 @@ class CliWebSpec extends AnyFunSuite {
     assert(workers.nonEmpty)
     assert(workers.forall(_.isDaemon), workers.map(_.getName))
   }
+
+  test("http: query_range refuses more than 11,000 points per series") {
+    val db = freshDb()
+    seed(db)
+    val server = Web.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val fine = queryRange(port, db, sel, "start=0&end=86400&step=1ms")
+      assert(fine.statusCode() == 400, fine.body())
+      assert(fine.body().contains(""""errorType":"bad_data""""), fine.body())
+      assert(fine.body().contains("exceeded maximum resolution of 11,000 " +
+        "points per timeseries. Try decreasing the query resolution " +
+        "(?step=XX)"), fine.body())
+      val coarse = queryRange(port, db, sel, "start=0&end=86400&step=10")
+      assert(coarse.statusCode() == 200, coarse.body())
+    } finally server.stop(0)
+  }
+
+  test("http: the bridge orders series as Spark does — NULL first, UTF-8 bytes") {
+    val db = freshDb()
+    val store = new graft.tsdb.GraftDb(spark, db)
+    // U+FF61 sorts before U+1F600 by UTF-8 bytes, after it by UTF-16
+    // code units; the `v` series has no `u` label (a NULL key cell)
+    for ((sel, slope) <- Seq("x{u=\"\uD83D\uDE00\"}" -> 1d,
+        "x{u=\"\uFF61\"}" -> 2d, """x{v="1"}""" -> 3d)) {
+      store.createStream(sel, graft.tsdb.VType.F64)
+      val ins = store.inserter(sel)
+      (1 to 4).foreach(i => ins.insert(10L * i, slope * i))
+      ins.flush()
+    }
+    val q = "sum by (u) (sum_over_time(x[20ms]))"
+    val server = Web.start(spark, 0)
+    try {
+      val resp = queryRange(server.getAddress.getPort, db, q,
+        "start=0.02&end=0.04&step=10ms")
+      assert(resp.statusCode() == 200, resp.body())
+      import scala.jdk.CollectionConverters._
+      val got = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(resp.body()).get("data").get("result").elements().asScala
+        .flatMap { s =>
+          val u = s.get("metric").get("u").asText()
+          s.get("values").elements().asScala
+            .map(p => (u, p.get(0).asDouble(), p.get(1).asText()))
+        }.toSeq
+      val r = store.engine().queryRange(
+        graft.tsdb.PromParser.parse(q), 20L, 40L, 10L)
+      val want = r.output
+        .orderBy((r.seriesKey :+ "timestamp").map(
+          org.apache.spark.sql.functions.col): _*)
+        .collect().filterNot(_.isNullAt(2)).toSeq
+        .map(row => (Option(row.getString(0)).getOrElse(""),
+          row.getLong(1) / 1000.0, row.getDouble(2).toString))
+      assert(got.map(_._1).distinct == Seq("", "\uFF61", "\uD83D\uDE00"))
+      assert(got == want)
+    } finally server.stop(0)
+  }
+
+  test("http: the server's own session answers like the caller's and leaves it unchanged") {
+    val db = freshDb()
+    val store = new graft.tsdb.GraftDb(spark, db)
+    // FIXTURES 3c "complex": `a + b` is the interpolated align, whose
+    // bucket count follows spark.sql.shuffle.partitions
+    for ((name, ts, vs) <- Seq(
+        ("a", Seq(1L, 2L, 4L, 6L, 10L, 12L, 13L, 14L, 15L, 16L),
+          Seq(10L, 20L, 30L, 20L, 20L, 10L, 15L, 20L, 80L, 100L)),
+        ("b", Seq(3L, 5L, 7L, 8L, 9L, 11L, 16L),
+          Seq(30L, 30L, 10L, 20L, 20L, 10L, 10L)))) {
+      store.createStream(name, graft.tsdb.VType.U64)
+      val ins = store.inserter(name)
+      ts.zip(vs).foreach { case (t, v) => ins.insert(t, v) }
+      ins.flush()
+    }
+    val server = Web.start(spark, 0)
+    try {
+      val resp = postJson(server.getAddress.getPort, "/query",
+        s"""{"path": "$db", "query": "a + b", "start": 0, "end": 100}""")
+      assert(resp.statusCode() == 200, resp.body())
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(resp.body())
+      import scala.jdk.CollectionConverters._
+      def column(k: String) =
+        node.get(k).elements().asScala.map(_.asDouble()).toSeq
+      val want = store.query("a + b", 0, 100).output.collect()
+        .map(r => (r.getLong(0).toDouble, r.getAs[Number](1).doubleValue()))
+        .sortBy(_._1).toSeq
+      assert(want == (1L to 16L).map(_.toDouble).zip(Seq(40d, 50d, 55d, 60d,
+        55d, 40d, 30d, 40d, 40d, 35d, 25d, 20d, 25d, 30d, 90d, 110d)))
+      assert(column("timestamps").zip(column("values_u64")) == want)
+    } finally server.stop(0)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "32")
+    // a caller whose time zone is set at runtime, not in the SparkConf
+    val (tz, width) = ("spark.sql.session.timeZone", "spark.sql.shuffle.partitions")
+    val caller = spark.newSession()
+    caller.conf.set(tz, "Asia/Kolkata")
+    val serving = Web.servingSession(caller)
+    assert(serving.conf.get(tz) == "Asia/Kolkata")
+    assert(serving.conf.get(width) == "1")
+    assert(caller.conf.get(width) == "32")
+  }
 }
