@@ -1337,20 +1337,34 @@ class CliWebSpec extends AnyFunSuite {
     assert(workers.forall(_.isDaemon), workers.map(_.getName))
   }
 
-  test("http: query_range refuses more than 11,000 points per series") {
+  test("http: query_range and a stepped /query refuse more than 11,000 points per series") {
     val db = freshDb()
     seed(db)
     val server = Web.start(spark, 0)
+    val tooFine = "exceeded maximum resolution of 11,000 points per " +
+      "timeseries. Try decreasing the query resolution (?step=XX)"
     try {
       val port = server.getAddress.getPort
       val fine = queryRange(port, db, sel, "start=0&end=86400&step=1ms")
       assert(fine.statusCode() == 400, fine.body())
       assert(fine.body().contains(""""errorType":"bad_data""""), fine.body())
-      assert(fine.body().contains("exceeded maximum resolution of 11,000 " +
-        "points per timeseries. Try decreasing the query resolution " +
-        "(?step=XX)"), fine.body())
+      assert(fine.body().contains(tooFine), fine.body())
       val coarse = queryRange(port, db, sel, "start=0&end=86400&step=10")
       assert(coarse.statusCode() == 200, coarse.body())
+      // each end fits in a Long (±9e18 ms), their difference does not:
+      // the span saturates instead of wrapping negative
+      val wide = queryRange(port, db, sel, "start=-9e15&end=9e15&step=1000")
+      assert(wide.statusCode() == 400, wide.body())
+      assert(wide.body().contains(tooFine), wide.body())
+      // /query with a "step" runs the same per-step evaluation
+      def stepped(step: Long) = postJson(port, "/query",
+        s"""{"path": "$db", "query": "sum_over_time(http_requests_total[1m])",
+           | "start": 0, "end": 86400000, "step": $step}""".stripMargin)
+      val fineQ = stepped(1)
+      assert(fineQ.statusCode() == 400, fineQ.body())
+      assert(fineQ.body().contains(tooFine), fineQ.body())
+      val coarseQ = stepped(10000)
+      assert(coarseQ.statusCode() == 200, coarseQ.body())
     } finally server.stop(0)
   }
 
