@@ -606,27 +606,31 @@ object TimeSeries {
     // user's samples; (group, wstart) is the one exchange key.
     "ts54_range_by" -> { (s, dir) =>
       engine(s, dir)
-        .rangeAggregateBy("rate(purchase[1d])", "user", SubStart, SubEnd)
-        .withColumn("value", round(col("value"), 6))
+        .rangeAggregateBy("rate(purchase[1d])",
+          graft.tsdb.Expr.Grouping(by = true, List("user")), SubStart, SubEnd)
+        .select(col("user").as("group"), col("timestamp"),
+          round(col("value"), 6).as("value"))
         .orderBy("group", "timestamp")
     },
 
     // grouped × sliding: every user's own series at every 12h step over
-    // a sliding 1d lookback — the full dashboard contract (queryRangeBy
-    // = ts54's grouping under ts52's per-step evaluation).
+    // a sliding 1d lookback — the full dashboard contract (ts54's
+    // grouping under ts52's per-step evaluation, stated in the tree).
     "ts55_query_range_by" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy("avg_over_time(purchase[1d])", "user",
-          SubStart, SubEnd, 12 * 3600 * 1000L)
-        .withColumn("value", round(col("value"), 6))
+        .queryRange("sum by (user) (avg_over_time(purchase[1d]))",
+          SubStart, SubEnd, 12 * 3600 * 1000L).output
+        .select(col("user").as("group"), col("timestamp"),
+          round(col("value"), 6).as("value"))
         .orderBy("group", "timestamp")
     },
 
     // grouped aggregate through the STRING surface — `sum by (user)
     // (purchase)`, the clause the reference parses then DROPS
-    // (planner.rs:84-88). ts21 pins the same semantics through the API
-    // method; this pins query() end-to-end: parser → Grouping →
-    // groupedAggregate, result columns named by the grouping labels.
+    // (planner.rs:84-88). ts21 pins the same semantics on the click
+    // stream under the `group` column; this pins query() end-to-end:
+    // parser → Grouping → groupedAggregate, result columns named by
+    // the grouping labels.
     "ts60_agg_by_promql" -> { (s, dir) =>
       engine(s, dir).query("sum by (user) (purchase)", SubStart, SubEnd)
         .output.select(col("user"), round(col("value"), 6).as("value"))
@@ -677,9 +681,8 @@ object TimeSeries {
           lit("cohort"), (col("user_id") % 3).cast("string")).as("labels"),
         graft.engine.Graft.tsMillis(ev).as("timestamp"), col("value"))
       new TsdbEngine(s, data, catalog)
-        .queryRangeBy("sum_over_time(purchase[1d])",
-          graft.tsdb.Expr.Grouping(by = true, List("cohort", "user")),
-          SubStart, SubEnd, 12 * 3600 * 1000L)
+        .queryRange("sum by (cohort, user) (sum_over_time(purchase[1d]))",
+          SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("cohort"), col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("cohort"), col("user").cast("long"), col("timestamp"))
@@ -750,13 +753,12 @@ object TimeSeries {
     // 1d-rate evaluates slidingly every 12h per user (one raw scan,
     // (user, step) derived frame), and the outer max_over_time tumbles
     // 3-day windows per user over it — "each user's worst 12h-sampled
-    // daily rate per 3-day window". subqueryRangeBy composes the
-    // queryRangeBy grouping with query()'s subquery evaluation.
+    // daily rate per 3-day window". The subquery takes its inner's
+    // grouping.
     "ts70_subquery_by" -> { (s, dir) =>
       engine(s, dir)
-        .subqueryRangeBy("max_over_time(rate(purchase[1d])[3d:12h])",
-          graft.tsdb.Expr.Grouping(by = true, List("user")),
-          SubStart, SubEnd)
+        .query("max_over_time(sum by (user) (rate(purchase[1d]))[3d:12h])",
+          SubStart, SubEnd).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1032,9 +1034,8 @@ object TimeSeries {
     // evaluator's subquery arm (one raw scan, per-(user, step) inner).
     "ts105_sliding_subquery_by" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy("max_over_time(rate(purchase[1d])[3d:12h])",
-          graft.tsdb.Expr.Grouping(by = true, List("user")),
-          SubStart, SubEnd, 86400000L)
+        .queryRange("max_over_time(sum by (user) (rate(purchase[1d]))[3d:12h])",
+          SubStart, SubEnd, 86400000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1051,13 +1052,12 @@ object TimeSeries {
 
     // ... its GROUPED SLIDING twin: per-user 12h purchase sums under a
     // 3-day sliding max at every daily step — the grouped Aggregate
-    // arm of the sliding evaluator (queryRangeBy), grouping carried by
-    // the aggregate node itself.
+    // arm of the sliding evaluator, grouping carried by the aggregate
+    // node itself.
     "ts108_subquery_agg_inner_by" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy("max_over_time(sum by (user) (purchase)[3d:12h])",
-          graft.tsdb.Expr.Grouping(by = true, List("user")),
-          SubStart, SubEnd, 86400000L)
+        .queryRange("max_over_time(sum by (user) (purchase)[3d:12h])",
+          SubStart, SubEnd, 86400000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1174,10 +1174,9 @@ object TimeSeries {
     // semantics (same oracle) reached through the canonical path.
     "ts124_subquery_without_inner" -> { (s, dir) =>
       engineCohort(s, dir)
-        .queryRangeBy(
-          "max_over_time(sum without () (purchase)[3d:12h])",
-          graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-          SubStart, SubEnd, 86400000L)
+        .queryRange("sum by (cohort) " +
+          "(max_over_time(sum without () (purchase)[3d:12h]))",
+          SubStart, SubEnd, 86400000L).output
         .select(col("cohort"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("cohort"), col("timestamp"))
@@ -1221,10 +1220,9 @@ object TimeSeries {
     // total over the trailing 3 days". Previously an honest rejection.
     "ts120_subquery_finer_by" -> { (s, dir) =>
       engineCohort(s, dir)
-        .queryRangeBy(
-          "max_over_time(sum by (cohort, user) (purchase)[3d:12h])",
-          graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-          SubStart, SubEnd, 86400000L)
+        .queryRange("sum by (cohort) " +
+          "(max_over_time(sum by (cohort, user) (purchase)[3d:12h]))",
+          SubStart, SubEnd, 86400000L).output
         .select(col("cohort"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("cohort"), col("timestamp"))
@@ -1279,10 +1277,9 @@ object TimeSeries {
 
     "ts101_grouped_sliding_binary" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy(
-          "sum_over_time(click[1d]) / sum_over_time(purchase[1d])",
-          graft.tsdb.Expr.Grouping(by = true, List("user")),
-          SubStart, SubEnd, 12 * 3600 * 1000L)
+        .queryRange("sum by (user) " +
+          "(sum_over_time(click[1d]) / sum_over_time(purchase[1d]))",
+          SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1294,11 +1291,9 @@ object TimeSeries {
     // anti-join on the (user, step) key.
     "ts102_grouped_sliding_setop" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy(
-          "sum_over_time(click[1d]) unless " +
-            "(sum_over_time(purchase[1d]) > 40)",
-          graft.tsdb.Expr.Grouping(by = true, List("user")),
-          SubStart, SubEnd, 12 * 3600 * 1000L)
+        .queryRange("sum by (user) (sum_over_time(click[1d]) unless " +
+            "(sum_over_time(purchase[1d]) > 40))",
+          SubStart, SubEnd, 12 * 3600 * 1000L).output
         .select(col("user"), col("timestamp"),
           round(col("value"), 6).as("value"))
         .orderBy(col("user").cast("long"), col("timestamp"))
@@ -1476,8 +1471,8 @@ object TimeSeries {
     // Grouped aggregate extension: sum of clicks by user label.
     "ts21_agg_by" -> { (s, dir) =>
       engine(s, dir)
-        .aggregateBy("click", graft.tsdb.Expr.AggSum, "user", SubStart, SubEnd)
-        .select(col("group"), round(col("value"), 6).as("value"))
+        .query("sum by (user) (click)", SubStart, SubEnd).output
+        .select(col("user").as("group"), round(col("value"), 6).as("value"))
         .orderBy(col("group").cast("long"))
     },
 

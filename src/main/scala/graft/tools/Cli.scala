@@ -22,7 +22,6 @@ import graft.tsdb.{GraftDb, VType}
   *   parse-headers
   *   query <promql> [start] [end] [export_csv_path]
   *   query-range <promql> <start> <end> <step>
-  *   query-range-by <promql> <label[,label...]> <start> <end> <step>
   *   label-values <key>
   *   chart <promql> [start] [end]
   *   create-stream <selector> <i64|u64|f64>
@@ -80,25 +79,10 @@ object Cli {
         case Seq("query-range", promql, start, end, step) =>
           // Prometheus query_range: sliding (T-range, T] at every step
           // (GraftDb.queryRange contract; the HTTP "step" field's twin);
-          // a grouped root prints like query-range-by
+          // a grouped root — `sum by (l) (...)` — prints each series row
+          // as "<labels..> <timestamp> <value>" ordered by (keys, time)
           printResult(
             db.queryRange(promql, start.toLong, end.toLong, step.toLong), out)
-          0
-        case Seq("query-range-by", promql, labels, start, end, step) =>
-          // grouped sliding evaluation: comma-separated label list →
-          // every label tuple's own series at each step, printed as
-          // "<labels..> <timestamp> <value>" ordered by (keys, time)
-          val ls = labels.split(',').map(_.trim).filter(_.nonEmpty).toList
-          val df = db.queryRangeBy(promql,
-            graft.tsdb.Expr.Grouping(by = true, ls),
-            start.toLong, end.toLong, step.toLong)
-          df.orderBy(df.columns.map(
-              org.apache.spark.sql.functions.col): _*)
-            .collect().foreach { r =>
-              val cells = r.toSeq.init.map(v =>
-                if (v == null) "<null>" else v.toString)
-              out(cells.mkString("", " ", " ") + fmt(r.get(r.length - 1)))
-            }
           0
         case Seq("label-values", key) =>
           db.labelValues(key).foreach(out)
@@ -171,8 +155,7 @@ object Cli {
           out(s"recorded $n points into $target"); 0
         case Seq("record-grouped", target, promql, byLabels, start, end, step) =>
           // grouped recording rule: one derived stream PER GROUP under
-          // `target`, labels preserved (the query-range-by convention:
-          // comma-separated by-labels)
+          // `target`, labels preserved (comma-separated by-labels)
           val ls = byLabels.split(',').map(_.trim).filter(_.nonEmpty).toList
           val n = db.recordGrouped(target, promql,
             graft.tsdb.Expr.Grouping(by = true, ls),

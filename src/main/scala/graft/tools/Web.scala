@@ -11,7 +11,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, VType}
@@ -636,30 +635,36 @@ object Web {
     }
     val r = db.engine().queryRange(tree, startMs, endMs, stepMs)
     PromMatrix(r.seriesKey, r.canonical,
-      r.output.collect().sorted(seriesOrder(r.seriesKey.size)))
+      r.output.collect().sorted(seriesOrder))
   }
 
-  /** Spark's ascending `orderBy(key..., timestamp)` over collected
-    * (key..., timestamp, value) rows: each key cell NULL first, then
+  /** Spark's ascending `orderBy` over every column of collected
+    * (key..., [timestamp,] value) rows, column by column: NULL first;
     * text by its UTF-8 bytes (`UTF8String`, as Spark compares strings
     * — not `String.compareTo`'s UTF-16 order, which puts U+1F600 before
-    * U+FF61); then the timestamp.
+    * U+FF61); numbers as Spark orders them (-0.0 equals 0.0, NaN last).
     */
-  private def seriesOrder(keys: Int): Ordering[Row] = new Ordering[Row] {
+  private val seriesOrder: Ordering[Row] = new Ordering[Row] {
     def compare(a: Row, b: Row): Int = {
       var c = 0
       var i = 0
-      while (c == 0 && i < keys) {
+      while (c == 0 && i < a.length) {
         c = (a.isNullAt(i), b.isNullAt(i)) match {
           case (true, true) => 0
           case (true, false) => -1
           case (false, true) => 1
-          case _ => UTF8String.fromString(a.getString(i))
-            .compareTo(UTF8String.fromString(b.getString(i)))
+          case _ => a.get(i) match {
+            case x: String => UTF8String.fromString(x)
+              .compareTo(UTF8String.fromString(b.getString(i)))
+            case x: java.lang.Long => java.lang.Long.compare(x, b.getLong(i))
+            case x: java.lang.Double =>
+              val y = b.getDouble(i)
+              if (x == y) 0 else java.lang.Double.compare(x, y)
+          }
         }
         i += 1
       }
-      if (c != 0) c else java.lang.Long.compare(a.getLong(keys), b.getLong(keys))
+      c
     }
   }
 
@@ -850,10 +855,10 @@ object Web {
     def need(k: String) = field(k).getOrElse(
       throw new IllegalArgumentException(s"missing field: $k"))
     val path = allowedPath(req, stores.dbRoot)
-    // optional "by" (array or comma-separated string, the /query
-    // convention) selects the GROUPED rule — one derived stream per
-    // group under `target`, labels preserved; it requires "step"
-    // (grouped rules record the per-step series)
+    // optional "by" (array or comma-separated string) selects the
+    // GROUPED rule — one derived stream per group under `target`,
+    // labels preserved; it requires "step" (grouped rules record the
+    // per-step series)
     val by = field("by").map(byLabels).getOrElse(Nil)
     val n = stores.write(path) { db =>
       if (by.isEmpty)
@@ -912,17 +917,17 @@ object Web {
 
   /** A grouped `/query` result (by/without, whole-range or per step) as
     * a `groups` array of {label..: value.., [timestamp: t,] value: n}
-    * objects, ordered by every column — the reference endpoint has no
-    * analogue (its planner drops grouping). A NULL value cell (Spark's
-    * divide-by-zero rule for a zero-denominator group) renders as JSON
-    * null, not NPE.
+    * objects, ordered by every column ([[seriesOrder]]) — the reference
+    * endpoint has no analogue (its planner drops grouping). A NULL
+    * value cell (Spark's divide-by-zero rule for a zero-denominator
+    * group) renders as JSON null, not NPE.
     */
   private def groupsJson(mapper: ObjectMapper, df: DataFrame): String = {
     val cols = df.columns
     val root = mapper.createObjectNode()
     root.put("value_type", "Float64")
     val arr = root.putArray("groups")
-    df.orderBy(cols.map(col): _*).collect().foreach { r =>
+    df.collect().sorted(seriesOrder).foreach { r =>
       val o = arr.addObject()
       cols.init.zipWithIndex.foreach {
         case ("timestamp", i) => o.put("timestamp", r.getLong(i))
@@ -949,29 +954,16 @@ object Web {
     // of the one-pass tumbling shape (GraftDb.queryRange contract).
     val step = field("step").map(_.asLong())
     step.foreach(requireResolution(start, end, _))
-    // Optional "by" (a JSON array of label names, or one comma-separated
-    // string) makes the step query GROUPED — every label tuple's own
-    // series at each step (GraftDb.queryRangeBy; the CLI's
-    // `query-range-by` twin). Whole-range grouped queries don't need
-    // the field: write the by-clause in the PromQL text.
-    val by = field("by").map(byLabels)
-    if (by.nonEmpty && step.isEmpty)
-      throw new IllegalArgumentException(
-        "\"by\" requires \"step\" (it selects grouped query_range " +
-          "evaluation); for whole-range grouped queries put the " +
-          "by-clause in the PromQL text instead")
+    // the grouping lives in the query text, stepped or not
+    require(field("by").isEmpty, "/query takes no \"by\" field — write " +
+      "the by clause in the query text: sum by (l) (...)")
     stores.read(path) { db =>
-      (by, step) match {
-        case (Some(ls), Some(st)) => groupsJson(mapper, db.queryRangeBy(
-          promql, graft.tsdb.Expr.Grouping(by = true, ls), start, end, st))
-        case _ =>
-          val res = step match {
-            case Some(st) => db.queryRange(promql, start, end, st)
-            case None => db.query(promql, start, end)
-          }
-          if (res.grouped) groupsJson(mapper, res.output)
-          else valuesJson(mapper, res)
+      val res = step match {
+        case Some(st) => db.queryRange(promql, start, end, st)
+        case None => db.query(promql, start, end)
       }
+      if (res.grouped) groupsJson(mapper, res.output)
+      else valuesJson(mapper, res)
     }
   }
 

@@ -163,9 +163,13 @@ final class TsdbEngine(
   def queryRange(e: Expr, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult = {
     def k(kExpr: Expr) = scalarK(kExpr, startMs, endMs)
-    def grouped(inner: Expr, g: Grouping) =
-      rangedResult(queryRangeBy(inner, g, startMs, endMs, stepMs),
-        groupProjection(g)._1, canonical = !g.by)
+    // the sliding recursion under a grouping; `by ()` pools like none
+    def grouped(inner: Expr, g: Option[Grouping]) = {
+      val key = withoutEmptyBy(g)
+      rangedResult(sliding(inner, key, startMs, endMs, stepMs),
+        key.fold(Seq.empty[String])(groupProjection(_)._1),
+        canonical = key.exists(!_.by))
+    }
     // a sampler's child: a matched composition, or any tree whose
     // grouping resolves — one series per group
     def series(child: Expr, op: String, example: String): TsdbResult =
@@ -173,8 +177,8 @@ final class TsdbEngine(
         case BinaryOp(kind, l @ Aggregate(_, _, Some(gl)),
             r @ Aggregate(_, _, Some(gr)), Some(m)) =>
           matchedRange(kind, l, gl, r, gr, m, startMs, endMs, stepMs)
-        case _ => innerGrouping(child) match {
-          case Some(g) =>
+        case _ => withoutEmptyBy(innerGrouping(child)) match {
+          case g @ Some(_) =>
             requireOneInnerGrouping(child, s"ranged $op")
             grouped(child, g)
           case None => throw new IllegalArgumentException(
@@ -189,7 +193,7 @@ final class TsdbEngine(
       case Aggregate(AggCountValues(label), inner, None) =>
         rangedResult(countValuesRange(label, inner, startMs, endMs, stepMs),
           Seq(label), canonical = false)
-      case GetK(_, kExpr, child, Some(g)) =>
+      case GetK(_, kExpr, child, g @ Some(_)) =>
         val r = grouped(child, g)
         if (k(kExpr) <= 0) r.copy(df = r.df.limit(0)) else r
       case GetK(top, kExpr, child, None) if innerGrouping(child).nonEmpty =>
@@ -205,11 +209,7 @@ final class TsdbEngine(
         val s = series(child, "limit_ratio",
           "limit_ratio(0.5, sum by (s) (m))")
         s.copy(df = perStepLimitRatio(s.df, s.seriesKey, r))
-      case _ => rootGrouping(e) match {
-        case Some(g) => grouped(e, g)
-        case None => rangedResult(sliding(e, None, startMs, endMs, stepMs),
-          Nil, canonical = false)
-      }
+      case _ => grouped(e, rootGrouping(e))
     }
   }
 
@@ -458,7 +458,7 @@ final class TsdbEngine(
 
   /** Subquery-offset report-back: the inner evaluated on the shifted
     * clock reports on the outer one (shared by the tumbling and
-    * sliding, grouped and ungrouped subquery arms).
+    * sliding subquery arms).
     */
   private def reportOnOuterClock(df: DataFrame, soff: Long): DataFrame =
     if (soff == 0L) df
@@ -606,11 +606,19 @@ final class TsdbEngine(
       // so the outer aggregation never touches raw rows again.
       // `offset` shifts the inner evaluation range back and reports on
       // the outer clock — the step grid stays aligned to `start`.
+      // A GROUPED inner (`max_over_time(sum by (u) (rate(x[1d]))
+      // [3d:12h])`, the per-tenant alerting shape) evaluates under the
+      // grouping [[queryRange]] gives it ([[rootGrouping]]), and the
+      // outer fn tumbles per (groups..., window): a grouped result of
+      // (groups..., timestamp = window start, value). Still one scan.
+      val g = rootGrouping(inner)
+      val gNames = g.fold(Seq.empty[String])(groupProjection(_)._1)
       val derived = reportOnOuterClock(
-        sliding(inner, None, start - soff, end - soff, subStep), soff)
+        sliding(inner, g, start - soff, end - soff, subStep), soff)
       TsdbResult(
-        RangeFns(kind, derived, subRange, start, end, fnArgs, rateMode),
-        isScalar = false, VType.F64)
+        RangeFns(kind, derived, subRange, start, end, fnArgs, rateMode,
+          groupCols = gNames),
+        isScalar = g.nonEmpty, VType.F64, grouped = g.nonEmpty)
 
     case RangeFn(_, other, _) =>
       throw new IllegalArgumentException(
@@ -877,8 +885,7 @@ final class TsdbEngine(
     *    see only that group's samples — and the outer aggregate then
     *    folds each group's windows (this engine's whole-range model:
     *    plain `sum(rate(m[1d]))` folds windows too).
-    *  - Values compute in Float64 (the grouped surface matches
-    *    [[aggregateBy]], including count → double).
+    *  - Values compute in Float64, count included.
     *
     * Scale shape: one scan, group keys derived row-locally from the
     * `labels` map, one exchange on (groups[, wstart]) — group count
@@ -933,11 +940,10 @@ final class TsdbEngine(
       }
   }
 
-  /** The grouped surface's aggregate column (count → double, matching
-    * [[aggregateBy]]). Shared by the one-level and nested paths, and by
-    * the ungrouped form for the Float64 family. count_values changes
-    * the KEY SET, so it routes through the callers' grouped-keys
-    * special case instead.
+  /** The grouped surface's aggregate column (count → double). Shared
+    * by the one-level and nested paths, and by the ungrouped form for
+    * the Float64 family. count_values changes the KEY SET, so it routes
+    * through the callers' grouped-keys special case instead.
     */
   private def aggColumn(kind: AggKind): Column = kind match {
     case AggSum => sum(col("value"))
@@ -1581,20 +1587,10 @@ final class TsdbEngine(
         applyOps(select(sel, start, end, gCols)
           .withColumn("value", col("value").cast("double")))
       case RangeFn(rk, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(rk != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
         // window math runs on the REPORTED time (shiftedTs) so offset
         // moves windows with the data, like Prometheus
-        val base = select(sel, start, end, gCols)
-          .select(gNames.map(col) ++ Seq(
-            (col("timestamp") -
-              pmod(col("timestamp") - start, lit(rangeMs))).as("wstart"),
-            col("timestamp"), col("value").cast("double").as("value")): _*)
-        applyOps(
-          RangeFns.aggWindows(rk, base, fnArgs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(rk, rateMode, col("wstart"), rangeMs))
-            .withColumnRenamed("wstart", "timestamp"))
+        applyOps(RangeFns(rk, select(sel, start, end, gCols), rangeMs,
+          start, end, fnArgs, rateMode, groupCols = gNames))
       case other => throw new IllegalArgumentException(
         "grouped evaluation supports a selector or a range function " +
           "over a matrix selector (optionally under instant math or " +
@@ -1603,54 +1599,19 @@ final class TsdbEngine(
     (rows, gNames)
   }
 
-  /** Grouped aggregates — the `sum by (label)` extension the reference
-    * parses but ignores (SURVEY §2 row 7): per-label-value whole-range
-    * aggregation over a selector, through the grouped surface's
-    * [[aggColumn]] (every kind but count_values, which rejects). Returns
-    * (group, value) rows.
-    */
-  def aggregateBy(selector: String, kind: AggKind, labelKey: String,
-      startMs: Long, endMs: Long): DataFrame = {
-    val sel = PromParser.parse(selector) match {
-      case s: Selector => s
-      case other => throw new IllegalArgumentException(s"not a selector: $other")
-    }
-    val aggCol = kind match {
-      case AggCountValues(_) => throw new IllegalArgumentException(
-        "aggregateBy has no count_values form — its output is keyed by " +
-          "value text, not by the label; use query(\"count_values(...)\")")
-      case k => aggColumn(k)
-    }
-    select(sel, startMs, endMs,
-        Seq(element_at(col("labels"), labelKey).as("group")))
-      .withColumn("value", col("value").cast("double"))
-      .groupBy("group").agg(aggCol.as("value"))
-  }
-
-  /** Grouped range functions — the `by (label)` extension applied to the
-    * range-fn family (mirrors [[aggregateBy]] for whole-range
-    * aggregates): per-(label value, tumbling window) results as
-    * (group, timestamp, value) rows. `promql` must be a range function
-    * over a matrix selector; each group's windows see only that group's
-    * samples (the per-series dashboard panel: `rate(metric[5m]) by
-    * (instance)`). absent_over_time is rejected — absence is not
-    * attributable to a label value.
+  /** Grouped range functions over TUMBLING windows — the per-series
+    * downsampling panel, `rate(metric[5m])` per `by`/`without` group:
+    * each group's windows see only that group's samples, and the rows
+    * are (group cols..., timestamp = window start, value). `promql` must
+    * be a range function over a matrix selector; absent_over_time and
+    * `by ()` reject. This is the one grouped surface with no PromQL tree
+    * form: in the whole-range model `sum by (user) (rate(purchase[1d]))`
+    * folds each group's windows into one value (ts61), so no tree keeps
+    * per-group tumbling windows over the raw samples.
     *
-    * Scale shape: identical to the ungrouped form with (group, wstart)
+    * Scale shape: identical to the ungrouped form with (groups, wstart)
     * as the one exchange key — group count multiplies output rows, not
     * passes over the scan.
-    */
-  def rangeAggregateBy(promql: String, labelKey: String,
-      startMs: Long, endMs: Long): DataFrame =
-    rangeAggregateBy(promql, Grouping(by = true, List(labelKey)),
-      startMs, endMs).withColumnRenamed(labelKey, "group")
-
-  /** [[rangeAggregateBy]] generalized to a full [[Expr.Grouping]]:
-    * label SETS (`by (service, dc)` — one column per label) and the
-    * `without` form (remaining-label-set groups as one canonical
-    * column), exactly the string surface's grouping semantics applied
-    * to per-window range-fn results. Emits (group cols..., timestamp,
-    * value).
     */
   def rangeAggregateBy(promql: String, grouping: Grouping,
       startMs: Long, endMs: Long): DataFrame =
@@ -1665,28 +1626,10 @@ final class TsdbEngine(
           s"selector, got: $other")
     }
 
-  /** [[rangeAggregateBy]] × [[queryRange]]: the grouped form under
-    * query_range's sliding per-step evaluation — every label value's
-    * own dashboard series at every step. Same bounded-replication
-    * explode, with (group, wstart) as the one exchange key; the scan
-    * extends one window behind start like queryRange's.
-    */
-  def queryRangeBy(promql: String, labelKey: String,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    queryRangeBy(promql, Grouping(by = true, List(labelKey)),
-      startMs, endMs, stepMs).withColumnRenamed(labelKey, "group")
-
-  /** [[queryRangeBy]] generalized to a full [[Expr.Grouping]] — label
-    * sets and the `without` form under the sliding per-step
-    * evaluation. Emits (group cols..., timestamp, value).
-    */
-  def queryRangeBy(promql: String, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    queryRangeBy(PromParser.parse(promql), grouping, startMs, endMs, stepMs)
-
-  /** [[queryRangeBy]] from a pre-parsed AST: the [[sliding]] recursion
-    * keyed by the grouping's columns — [[queryRange]]'s grouped roots
-    * run through it. Emits (group cols..., timestamp, value).
+  /** The [[sliding]] recursion keyed by `grouping`'s columns: the
+    * grouped root of [[queryRange]] as a bare frame, (group cols...,
+    * timestamp, value). [[queryRange]] of `sum by (g) (parsed)` answers
+    * the same rows.
     */
   def queryRangeBy(parsed: Expr, grouping: Grouping,
       startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
@@ -1695,10 +1638,10 @@ final class TsdbEngine(
     sliding(parsed, Some(grouping), startMs, endMs, stepMs)
   }
 
-  /** The ONE sliding per-step evaluator: [[queryRange]] runs it with no
-    * grouping (the whole selection is one pooled series) or, through
-    * [[queryRangeBy]], with one pooled series per label group, and every
-    * subquery `expr[range:step]` evaluates its inner through it. Frames
+  /** The ONE sliding per-step evaluator: [[queryRange]] runs it under
+    * the tree's grouping — none (the whole selection is one pooled
+    * series) or one pooled series per label group — and every subquery
+    * `expr[range:step]` evaluates its inner through it. Frames
     * are (group cols..., timestamp = eval time, value); ungrouped, the
     * group columns are empty and every key below degenerates to the
     * step timestamp. Accepted shapes:
@@ -1841,8 +1784,7 @@ final class TsdbEngine(
             s"grouped aggregate (${if (x.by) "by" else "without"} " +
               s"${x.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
               "sliding evaluation — its group columns must appear in the " +
-              "output; evaluate through queryRangeBy/subqueryRangeBy with " +
-              "the same grouping"))
+              "output; put the same grouping on the root aggregate"))
           case Some(gr) => require(clause.forall(x => x.by == gr.by &&
               x.labels.toSet == gr.labels.toSet),
             s"aggregate grouping $g differs from the evaluation " +
@@ -1893,7 +1835,7 @@ final class TsdbEngine(
       rhs: Expr, gr: Grouping, m: VectorMatch,
       startMs: Long, endMs: Long, stepMs: Long): TsdbResult = {
     def side(e: Expr, g: Grouping) =
-      (queryRangeBy(e, g, startMs, endMs, stepMs), groupProjection(g)._1)
+      (sliding(e, Some(g), startMs, endMs, stepMs), groupProjection(g)._1)
     val (lDf, lCols) = side(lhs, gl)
     val (rDf, rCols) = side(rhs, gr)
     val manyG = if (m.card == OneToMany) gr else gl
@@ -1952,62 +1894,6 @@ final class TsdbEngine(
       else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
     kept.drop("_rk", "_n")
   }
-
-  /** GROUPED SUBQUERY — the outer range function folding a grouped
-    * sliding inner:
-    * `subqueryRangeBy("max_over_time(rate(x[5m])[1h:5m])", by (u), ...)`
-    * = each u's peak 5-minute rate within every tumbling hour — the
-    * per-tenant alerting shape ([[queryRangeBy]]'s grouping composed
-    * with the subquery evaluation of query()'s SubqueryMatrix case).
-    *
-    * The inner range fn evaluates per (group, step) over ONE raw scan
-    * (RangeFns.sliding with the group columns — the existing
-    * (group, wstart) machinery); the derived frame is step-count ×
-    * group-count bounded (metadata-sized), and the outer fn tumbles
-    * `subRange` windows per group over it — no scan amplification, the
-    * exact property the ungrouped subquery case documents. Emits
-    * (group cols..., timestamp = outer window start, value).
-    *
-    * Scope: the inner is anything the sliding evaluator accepts
-    * ([[sliding]]'s recursion — range fns over matrix
-    * selectors under instant math, scalar-literal arithmetic/
-    * comparison, binary or set composition), so the grouped and
-    * ungrouped subquery surfaces accept the SAME inner algebra.
-    */
-  def subqueryRangeBy(promql: String, grouping: Grouping,
-      startMs: Long, endMs: Long): DataFrame =
-    PromParser.parse(promql) match {
-      case RangeFn(okind, SubqueryMatrix(inner, subRange, subStep, soff),
-          oargs) =>
-        require(okind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val (gNames, _) = groupProjection(grouping)
-        require(gNames.nonEmpty,
-          "by () has no grouped form — use query()'s subquery")
-        // subquery offset: inner evaluated on the shifted clock,
-        // reported on the outer one. A finer `by` inner grouping
-        // evaluates per its own key and pools into the evaluation
-        // groups at the tumbling fold (round 14; the sliding subquery
-        // arm's rule)
-        val ig = finerInnerGrouping(inner, grouping)
-        val all = queryRangeBy(inner, ig,
-          startMs - soff, endMs - soff, subStep)
-        val steps = reportOnOuterClock(
-          if (ig eq grouping) all
-          else projectInnerGroups(all, ig, gNames), soff)
-        val base = steps.select(gNames.map(col) ++ Seq(
-          (col("timestamp") -
-            pmod(col("timestamp") - startMs, lit(subRange))).as("wstart"),
-          col("timestamp"), col("value").cast("double").as("value")): _*)
-        RangeFns.aggWindows(okind, base, oargs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(okind, rateMode, col("wstart"), subRange))
-          .select(gNames.map(col) ++
-            Seq(col("wstart").as("timestamp"), col("value")): _*)
-      case other => throw new IllegalArgumentException(
-        s"subqueryRangeBy requires a range function over a subquery, " +
-          s"got: $other")
-    }
 
   /** Matcher conjunction over the long-format scan — one row-local
     * predicate per matcher, Prometheus semantics (absent label ≡ "",
@@ -2376,18 +2262,22 @@ object TsdbEngine {
     case FnDeg => degrees(v)
     case FnRad => radians(v)
     // time components of the value read as epoch SECONDS, UTC,
-    // truncated toward zero (Go's time.Unix(int64(v), 0))
+    // truncated toward zero (Go's time.Unix(int64(v), 0)). Plain
+    // arithmetic and a zone-free DATE, so spark.sql.session.timeZone
+    // never shifts the answer
     case tc: TimeComponentFn =>
-      val ts = timestamp_seconds(v.cast("long"))
+      val secs = v.cast("long")
+      val ofDay = pmod(secs, lit(86400L))
+      val day = date_from_unix_date(((secs - ofDay) / 86400).cast("int"))
       (tc match {
-        case FnMinute => minute(ts)
-        case FnHour => hour(ts)
-        case FnDayOfWeek => dayofweek(ts) - 1 // Prometheus: Sunday = 0
-        case FnDayOfMonth => dayofmonth(ts)
-        case FnDayOfYear => dayofyear(ts)
-        case FnDaysInMonth => dayofmonth(last_day(ts))
-        case FnMonth => month(ts)
-        case FnYear => year(ts)
+        case FnMinute => floor(pmod(secs, lit(3600L)) / 60)
+        case FnHour => floor(ofDay / 3600)
+        case FnDayOfWeek => dayofweek(day) - 1 // Prometheus: Sunday = 0
+        case FnDayOfMonth => dayofmonth(day)
+        case FnDayOfYear => dayofyear(day)
+        case FnDaysInMonth => dayofmonth(last_day(day))
+        case FnMonth => month(day)
+        case FnYear => year(day)
       }).cast("double")
   }
 }

@@ -1024,23 +1024,6 @@ final class GraftDb(
       stepMs: Long): TsdbResult =
     engine().queryRange(promql, startMs, endMs, stepMs)
 
-  /** Grouped sliding evaluation ([[TsdbEngine.queryRangeBy]]): every
-    * label tuple's own series at each step; the CLI's `query-range-by`
-    * subcommand routes here.
-    */
-  def queryRangeBy(promql: String, grouping: Expr.Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    engine().queryRangeBy(promql, grouping, startMs, endMs, stepMs)
-
-  /** Grouped subquery evaluation ([[TsdbEngine.subqueryRangeBy]]):
-    * `max_over_time(rate(x[1d])[3d:12h])` per label tuple — the outer
-    * range fn tumbles per group over the grouped sliding inner's
-    * derived series; one raw scan.
-    */
-  def subqueryRangeBy(promql: String, grouping: Expr.Grouping,
-      startMs: Long, endMs: Long): DataFrame =
-    engine().subqueryRangeBy(promql, grouping, startMs, endMs)
-
   /** CSV export of a vector query (tachyon_cli/src/main.rs:177-186). */
   def exportCsv(promql: String, startMs: Long, endMs: Long, outPath: String): Unit = {
     val res = query(promql, startMs, endMs)

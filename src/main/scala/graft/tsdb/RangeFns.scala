@@ -88,27 +88,32 @@ object RangeFns {
   /** Evaluate `kind` over `samples` (timestamp LONG ms, value — already
     * range-filtered to [startMs, endMs] by the selector scan) with
     * tumbling `windowMs` windows aligned to `startMs`. Returns
-    * (timestamp LONG = window start, value DOUBLE).
+    * (timestamp LONG = window start, value DOUBLE). With `groupCols`,
+    * `samples` carries them first and each group windows only its own
+    * samples: (groups..., timestamp, value).
     */
   def apply(kind: RangeFnKind, samples: DataFrame, windowMs: Long,
       startMs: Long, endMs: Long, args: List[Double] = Nil,
-      mode: RateMode = Exact): DataFrame = {
+      mode: RateMode = Exact, groupCols: Seq[String] = Nil): DataFrame = {
     require(windowMs > 0, s"range window must be positive, got $windowMs")
-    val v = col("value").cast("double")
+    require(groupCols.isEmpty || kind != FnAbsentOverTime,
+      "absent_over_time has no grouped form (absence is not " +
+        "attributable to a label value)")
+    val g = groupCols.map(col)
     // timestamp >= startMs is guaranteed by the selector scan; pmod keeps
     // the window key in exact Long arithmetic (a double division would
     // wobble near window edges at large epoch magnitudes).
-    val base = samples.select(
+    val base = samples.select(g ++ Seq(
       (col("timestamp") - pmod(col("timestamp") - startMs, lit(windowMs)))
         .as("wstart"),
-      col("timestamp"), v.as("value"))
+      col("timestamp"), col("value").cast("double").as("value")): _*)
     val out =
       if (kind == FnAbsentOverTime)
         absent(base, samples.sparkSession,
           (endMs - startMs) / windowMs, startMs, windowMs)
-      else aggWindows(kind, base, args,
-        extrapolate = extrapolateSpec(kind, mode, col("wstart"), windowMs))
-    out.select(col("wstart").as("timestamp"), col("value"))
+      else aggWindows(kind, base, args, groupCols :+ "wstart",
+        extrapolateSpec(kind, mode, col("wstart"), windowMs))
+    out.select(g ++ Seq(col("wstart").as("timestamp"), col("value")): _*)
   }
 
   /** Window bounds for the extrapolated estimator, when it applies:
@@ -190,10 +195,10 @@ object RangeFns {
 
   /** The per-window aggregation common to both window shapes: `base` is
     * (keys..., timestamp LONG, value DOUBLE); emits (keys..., value).
-    * `keys` defaults to the window key alone; the grouped by-label form
-    * ([[graft.tsdb.TsdbEngine.rangeAggregateBy]]) prepends its label
-    * column — everything below groups and partitions on the full key
-    * set, so per-group windows never see each other's samples. deriv
+    * `keys` defaults to the window key alone; the grouped forms of
+    * both window shapes (`groupCols`) prepend their group columns —
+    * everything below groups and partitions on the full key set, so
+    * per-group windows never see each other's samples. deriv
     * requires a "wstart" key (its x values shift to window-relative
     * seconds).
     */

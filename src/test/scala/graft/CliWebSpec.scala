@@ -96,7 +96,7 @@ class CliWebSpec extends AnyFunSuite {
     assert(g == """[{"service":"mob","value":8},{"service":"web","value":3}]""", g)
   }
 
-  test("cli: query-range-by slides per label group") {
+  test("cli: query-range slides a grouped root per label group") {
     val db = freshDb()
     assert(cli(db, "create-stream", """req{service = "web"}""", "f64")._1 == 0)
     assert(cli(db, "create-stream", """req{service = "mob"}""", "f64")._1 == 0)
@@ -105,21 +105,23 @@ class CliWebSpec extends AnyFunSuite {
         t.toString, v.toString)._1 == 0)
     assert(cli(db, "insert", """req{service = "mob"}""", "10", "8")._1 == 0)
     // eval T=20 window (0,20]: web 1+2=3, mob 8; T=40 (20,40]: web 4
-    val (c, lines) = cli(db, "query-range-by",
-      "sum_over_time(req[20ms])", "service", "20", "40", "20")
+    val (c, lines) = cli(db, "query-range",
+      "sum by (service) (sum_over_time(req[20ms]))", "20", "40", "20")
     assert(c == 0 && lines == Seq("mob 20 8", "web 20 3", "web 40 4"), lines)
     // the library surface's grouped SUBQUERY over the same fixture:
     // both steps land in the one 40ms outer window at 20 — per-group
     // max of the step series above (web max(3,4)=4, mob 8)
     val sub = new graft.tsdb.GraftDb(spark, db)
-      .subqueryRangeBy("max_over_time(sum_over_time(req[20ms])[40ms:20ms])",
-        graft.tsdb.Expr.Grouping(by = true, List("service")), 20, 40)
-      .orderBy("service").collect()
+      .query("max_over_time(sum by (service) " +
+        "(sum_over_time(req[20ms]))[40ms:20ms])", 20, 40)
+    assert(sub.grouped)
+    val subRows = sub.output.orderBy("service").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    assert(sub.toSeq == Seq(("mob", 20L, 8d), ("web", 20L, 4d)), sub.toSeq)
+    assert(subRows.toSeq == Seq(("mob", 20L, 8d), ("web", 20L, 4d)),
+      subRows.toSeq)
   }
 
-  test("http: \"by\" + \"step\" selects grouped query_range evaluation") {
+  test("http: /query refuses \"by\"; a stepped grouped root answers the old by + step body") {
     val db = freshDb()
     assert(cli(db, "create-stream", """req{service = "web"}""", "f64")._1 == 0)
     assert(cli(db, "create-stream", """req{service = "mob"}""", "f64")._1 == 0)
@@ -130,29 +132,27 @@ class CliWebSpec extends AnyFunSuite {
     val server = Web.start(spark, 0)
     try {
       val port = server.getAddress.getPort
-      def post(body: String): HttpResponse[String] =
-        HttpClient.newHttpClient().send(
-          HttpRequest.newBuilder(URI.create(s"http://localhost:$port/query"))
-            .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-          HttpResponse.BodyHandlers.ofString())
-      // the CLI query-range-by fixture through HTTP: eval T=20 window
-      // (0,20] → web 3, mob 8; T=40 (20,40] → web 4
-      val resp = post(s"""{"path": "$db", "query": "sum_over_time(req[20ms])",
-        | "start": 20, "end": 40, "step": 20, "by": ["service"]}""".stripMargin)
+      // the query-range fixture above through HTTP: eval T=20 window
+      // (0,20] → web 3, mob 8; T=40 (20,40] → web 4 — the body the
+      // removed "by": ["service"] + "step" form answered
+      val resp = postJson(port, "/query", s"""{"path": "$db",
+        | "query": "sum by (service) (sum_over_time(req[20ms]))",
+        | "start": 20, "end": 40, "step": 20}""".stripMargin)
       assert(resp.statusCode() == 200, resp.body())
-      assert(resp.body().contains(
-        """"groups":[{"service":"mob","timestamp":20,"value":8.0},""" +
-          """{"service":"web","timestamp":20,"value":3.0},""" +
-          """{"service":"web","timestamp":40,"value":4.0}]"""), resp.body())
-      // one comma-separated string works like the JSON-array form
-      val resp2 = post(s"""{"path": "$db", "query": "sum_over_time(req[20ms])",
-        | "start": 20, "end": 40, "step": 20, "by": "service"}""".stripMargin)
-      assert(resp2.statusCode() == 200 && resp2.body() == resp.body())
-      // "by" without "step" is a loud 400, never a silent ungrouped run
-      val bad = post(s"""{"path": "$db", "query": "sum_over_time(req[20ms])",
-        | "start": 20, "end": 40, "by": ["service"]}""".stripMargin)
-      assert(bad.statusCode() == 400 && bad.body().contains("requires"),
-        s"${bad.statusCode()} ${bad.body()}")
+      assert(resp.body() == """{"value_type":"Float64","groups":[""" +
+        """{"service":"mob","timestamp":20,"value":8.0},""" +
+        """{"service":"web","timestamp":20,"value":3.0},""" +
+        """{"service":"web","timestamp":40,"value":4.0}]}""", resp.body())
+      // "by" is refused with or without "step", as an array or a string
+      for (extra <- Seq(""", "step": 20, "by": ["service"]""",
+          """, "step": 20, "by": "service"""", """, "by": ["service"]""")) {
+        val bad = postJson(port, "/query", s"""{"path": "$db",
+          | "query": "sum_over_time(req[20ms])",
+          | "start": 20, "end": 40$extra}""".stripMargin)
+        assert(bad.statusCode() == 400 &&
+          bad.body().contains("write the by clause in the query text"),
+          s"${bad.statusCode()} ${bad.body()}")
+      }
     } finally server.stop(0)
   }
 
@@ -1404,6 +1404,79 @@ class CliWebSpec extends AnyFunSuite {
           row.getLong(1) / 1000.0, row.getDouble(2).toString))
       assert(got.map(_._1).distinct == Seq("", "\uFF61", "\uD83D\uDE00"))
       assert(got == want)
+    } finally server.stop(0)
+  }
+
+  test("http: grouped /query answers order as Spark does — NULL first, UTF-8 bytes") {
+    val db = freshDb()
+    val store = new graft.tsdb.GraftDb(spark, db)
+    // U+FF61 sorts before U+1F600 by UTF-8 bytes, after it by UTF-16
+    // code units; the `v` series has no `u` label (a NULL key cell)
+    for ((sel, slope) <- Seq("x{u=\"\uD83D\uDE00\"}" -> 1d,
+        "x{u=\"\uFF61\"}" -> 2d, """x{v="1"}""" -> 3d)) {
+      store.createStream(sel, graft.tsdb.VType.F64)
+      val ins = store.inserter(sel)
+      (1 to 4).foreach(i => ins.insert(10L * i, slope * i))
+      ins.flush()
+    }
+    val server = Web.start(spark, 0)
+    try {
+      import scala.jdk.CollectionConverters._
+      for ((q, step) <- Seq("sum by (u) (x)" -> None,
+          "sum by (u) (sum_over_time(x[20ms]))" -> Some(10L))) {
+        val resp = postJson(server.getAddress.getPort, "/query",
+          s"""{"path": "$db", "query": "$q", "start": 10, "end": 40""" +
+            step.fold("")(st => s""", "step": $st""") + "}")
+        assert(resp.statusCode() == 200, resp.body())
+        val got = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(resp.body()).get("groups").elements().asScala
+          .map(o => (Option(o.get("u")).filterNot(_.isNull).map(_.asText()),
+            Option(o.get("timestamp")).map(_.asLong()),
+            o.get("value").asDouble())).toSeq
+        // the distributed orderBy over every column, on the caller's
+        // session
+        val r = step.fold(store.query(q, 10, 40))(
+          store.queryRange(q, 10, 40, _))
+        val want = r.output.orderBy(r.output.columns.map(
+            org.apache.spark.sql.functions.col): _*).collect().toSeq
+          .map(row => (Option(row.getString(0)),
+            step.map(_ => row.getLong(1)), row.getDouble(row.length - 1)))
+        assert(got.map(_._1).distinct ==
+          Seq(None, Some("\uFF61"), Some("\uD83D\uDE00")), got)
+        assert(got == want)
+      }
+    } finally server.stop(0)
+  }
+
+  test("http: time-component functions answer in UTC whatever the session zone") {
+    val db = freshDb()
+    val store = new graft.tsdb.GraftDb(spark, db)
+    // epoch 0, and 2024-01-06 23:00:00 UTC — a Saturday, already
+    // Sunday 04:30 in Asia/Kolkata (UTC+05:30)
+    for ((name, v) <- Seq("zero" -> 0d, "late" -> 1704582000d)) {
+      store.createStream(name, graft.tsdb.VType.F64)
+      val ins = store.inserter(name)
+      ins.insert(10L, v)
+      ins.flush()
+    }
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    val server = Web.start(caller, 0)
+    try {
+      def answer(q: String): Double = {
+        val resp = postJson(server.getAddress.getPort, "/query",
+          s"""{"path": "$db", "query": "$q", "start": 0, "end": 100}""")
+        assert(resp.statusCode() == 200, resp.body())
+        val vs = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(resp.body()).get("values_f64")
+        assert(vs.size() == 1, resp.body())
+        vs.get(0).asDouble()
+      }
+      assert(answer("hour(zero)") == 0d)
+      assert(answer("minute(zero)") == 0d)
+      assert(answer("day_of_week(late)") == 6d)
+      assert(answer("day_of_month(late)") == 6d)
+      assert(answer("hour(late)") == 23d)
     } finally server.stop(0)
   }
 

@@ -612,8 +612,8 @@ class LibrarySpec extends AnyFunSuite {
         .doubleValue()
     assert(num("sum(x)") == 64.0)
     assert(num("sum by () (x)") == num("sum(x)"))
-    val by = graft.tsdb.Expr.Grouping(by = true, List("l"))
-    val grouped = db.queryRangeBy("sum_over_time(x[20ms])", by, 0L, 70L, 10L)
+    val grouped = db.queryRange("sum by (l) (sum_over_time(x[20ms]))",
+        0L, 70L, 10L).df
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     val ungrouped = Seq("a", "b").flatMap { l =>

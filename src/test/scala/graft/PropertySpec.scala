@@ -379,12 +379,12 @@ class PropertySpec extends AnyFunSuite {
           math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
       case _ => a == b
     }
-    val by = graft.tsdb.Expr.Grouping(by = true, List("l"))
     var answered = 0
     for (((q, start), step) <- samples(for {
         q <- tree(2); s <- Gen.oneOf(20L, 40L); st <- Gen.oneOf(10L, 15L)
       } yield ((q, s), st), 6, seed = 3L)) {
-      val grouped = e.queryRangeBy(q(None), by, start, start + 60, step)
+      val grouped = e.queryRange(s"sum by (l) (${q(None)})",
+          start, start + 60, step).df
         .collect().map(r =>
           (r.getString(0), r.getLong(1)) -> Option(r.get(2)).map(_.asInstanceOf[Double]))
       assert(grouped.map(_._1).distinct.length == grouped.length, q(None))
@@ -402,6 +402,71 @@ class PropertySpec extends AnyFunSuite {
     }
     // vacuous unless most trees answer rows
     assert(answered >= 4, s"only $answered of 6 trees answered rows")
+  }
+
+  test("a grouped whole-range subquery equals the per-group tumbling fold of its grouped query_range inner") {
+    // four series x{l, k}: `by (l)`, the finer `by (l, k)` and the
+    // canonical `without ()` all name different groups
+    val series = for (l <- Seq("a", "b"); k <- Seq("p", "q"))
+      yield Map("l" -> l, "k" -> k)
+    val data = samples(Gen.listOfN(40, for {
+      ls <- Gen.oneOf(series)
+      t <- Gen.choose(0L, 120L)
+      v <- Gen.choose(1L, 20L).map(_.toDouble)
+    } yield ("x", ls, t, v)), 1, seed = 17L).head
+    val e = new TsdbEngine(spark, TsdbFixtures.longDf(data),
+      new StreamCatalog(series.map(StreamDef("x", _, VType.F64))))
+    val inner: Gen[String] = for {
+      f <- Gen.oneOf("sum_over_time", "max_over_time", "count_over_time")
+      w <- Gen.oneOf(10, 15, 20)
+      g <- Gen.oneOf("by (l)", "by (l, k)", "without ()")
+      nested <- Gen.oneOf(false, true)
+    } yield
+      if (nested) s"sum by (l) (max_over_time(sum $g ($f(x[${w}ms]))[20ms:5ms]))"
+      else s"sum $g ($f(x[${w}ms]))"
+    val folds = Seq[(String, Seq[Double] => Double)](
+      ("max_over_time", _.max), ("sum_over_time", _.sum),
+      ("count_over_time", _.size.toDouble),
+      ("avg_over_time", vs => vs.sum / vs.size))
+    def close(x: Double, y: Double) =
+      math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
+    var answered = 0
+    // subquery ranges that are and are not multiples of the step put
+    // the inner's step points on and beside the outer window edges
+    for ((((in, (fn, fold)), (range, step)), (off, start)) <- samples(for {
+        in <- inner
+        f <- Gen.oneOf(folds)
+        rs <- Gen.oneOf((20L, 5L), (20L, 10L), (25L, 10L), (30L, 20L))
+        off <- Gen.oneOf(5L, 10L, 15L)
+        start <- Gen.oneOf(10L, 15L, 20L)
+      } yield (((in, f), rs), (off, start)), 8, seed = 5L)) {
+      val end = start + 80
+      val q = s"$fn(($in)[${range}ms:${step}ms] offset ${off}ms)"
+      def keyed(df: org.apache.spark.sql.DataFrame) = {
+        val n = df.columns.length - 2
+        df.collect().toSeq.map(r =>
+          ((0 until n).map(i => Option(r.getString(i))), r.getLong(n),
+            r.getDouble(n + 1)))
+      }
+      // the fold, in Scala: the inner's query_range rows on the
+      // shifted clock, reported back by the offset, tumbled per group
+      // in range-wide windows from start
+      val want = keyed(e.queryRange(in, start - off, end - off, step).df)
+        .map { case (g, t, v) => (g, t + off, v) }
+        .groupBy { case (g, t, _) =>
+          (g, t - java.lang.Math.floorMod(t - start, range)) }
+        .map { case (k, rows) => k -> fold(rows.map(_._3)) }
+      val res = e.query(q, start, end)
+      assert(res.grouped, q)
+      val got = keyed(res.df).map { case (g, t, v) => (g, t) -> v }
+      assert(got.map(_._1).distinct.size == got.size, q)
+      assert(got.map(_._1).toSet == want.keySet &&
+        got.forall { case (k, v) => close(v, want(k)) },
+        s"$q over [$start, $end]: got ${got.sortBy(_._1.toString)} " +
+          s"want ${want.toSeq.sortBy(_._1.toString)}")
+      if (got.nonEmpty) answered += 1
+    }
+    assert(answered >= 6, s"only $answered of 8 subqueries answered rows")
   }
 
   test("extrapolated increase equals the Prometheus formula, brute-forced") {

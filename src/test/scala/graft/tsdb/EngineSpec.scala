@@ -680,55 +680,51 @@ class EngineSpec extends AnyFunSuite {
 
   test("grouped sliding composition: binary join, null-safe keys, or-fill, subquery inner") {
     val e = groupedEngine()
-    val byDc = Expr.Grouping(by = true, List("dc"))
     def rows(df: DataFrame): Set[(Option[String], Long, Double)] =
       df.collect().toSet[Row].map(r =>
         (Option(r.getString(0)), r.getLong(1), r.getDouble(2)))
+    def byDc(inner: String) =
+      e.queryRange(s"sum by (dc) ($inner)", 20, 40, 20).df
     // windowed mean per dc: sum/count joined on (dc, step) — the NULL
     // group (cli's missing dc) must match itself through the join
-    val mean = e.queryRangeBy(
-      "sum_over_time(req[20ms]) / count_over_time(req[20ms])",
-      byDc, 20, 40, 20)
+    val mean = byDc(
+      "sum_over_time(req[20ms]) / count_over_time(req[20ms])")
     // windows are (T-20, T]: ALL of dc=a's and dc=b's samples (t=10,
     // t=20) land in the step-20 window; cli's t=30 in step 40's
     assert(rows(mean) == Set(
       (Some("a"), 20L, 11d / 3), (Some("b"), 20L, 10d),
       (None, 40L, 32d)), rows(mean))
     // or: empty left (threshold filters everything) → right fills
-    val orFill = e.queryRangeBy(
-      "(sum_over_time(req[20ms]) > 100) or count_over_time(req[20ms])",
-      byDc, 20, 40, 20)
+    val orFill = byDc(
+      "(sum_over_time(req[20ms]) > 100) or count_over_time(req[20ms])")
     assert(rows(orFill) == Set(
       (Some("a"), 20L, 3d), (Some("b"), 20L, 2d), (None, 40L, 1d)),
       rows(orFill))
     // and/unless on the (group, step) key
-    val masked = e.queryRangeBy(
-      "sum_over_time(req[20ms]) unless (count_over_time(req[20ms]) > 2)",
-      byDc, 20, 40, 20)
+    val masked = byDc(
+      "sum_over_time(req[20ms]) unless (count_over_time(req[20ms]) > 2)")
     assert(rows(masked) == Set(
       (Some("b"), 20L, 20d), (None, 40L, 32d)), rows(masked))
     // SLIDING subquery per group: each dc's own inner series under the outer
     // sliding max (null group included)
-    val subSlide = e.queryRangeBy(
-      "max_over_time(sum_over_time(req[20ms])[20ms:20ms])",
-      byDc, 20, 40, 20)
+    val subSlide = byDc(
+      "max_over_time(sum_over_time(req[20ms])[20ms:20ms])")
     assert(rows(subSlide) == Set(
       (Some("a"), 20L, 11d), (Some("b"), 20L, 20d), (None, 40L, 32d)),
       rows(subSlide))
     // grouped SUBQUERY over a composed inner: the outer max tumbles
     // the per-(dc, step) ratio series — one 40ms window from start 20
-    val sub = e.subqueryRangeBy(
-      "max_over_time((sum_over_time(req[20ms]) / " +
-        "count_over_time(req[20ms]))[40ms:20ms])", byDc, 20, 40)
+    val sub = e.query(
+      "max_over_time(sum by (dc) (sum_over_time(req[20ms]) / " +
+        "count_over_time(req[20ms]))[40ms:20ms])", 20, 40).df
     assert(rows(sub) == Set(
       (Some("a"), 20L, 11d / 3), (Some("b"), 20L, 10d), (None, 20L, 32d)),
       rows(sub))
     // V2V comparison and arbitrary shapes still reject
-    intercept[IllegalArgumentException](e.queryRangeBy(
-      "sum_over_time(req[20ms]) > count_over_time(req[20ms])",
-      byDc, 20, 40, 20))
     intercept[IllegalArgumentException](
-      e.queryRangeBy("req", byDc, 20, 40, 20))
+      byDc("sum_over_time(req[20ms]) > count_over_time(req[20ms])"))
+    intercept[IllegalArgumentException](
+      byDc("sum_over_time(req[20ms]) + req"))
     // MATCHED sliding composition: share-of-dc per (service, step),
     // `/ on (dc) group_left` — the one side keyed exactly by dc; the
     // null dc group (cli) matches itself through the null-safe key
@@ -795,8 +791,8 @@ class EngineSpec extends AnyFunSuite {
     // set operators take vector operands, not scalars — in the grouped
     // AND ungrouped sliding evaluators (the NumberLit arithmetic arms
     // must not swallow them into "not arithmetic" internal errors)
-    val se1 = intercept[IllegalArgumentException](e.queryRangeBy(
-      "sum_over_time(req[20ms]) unless 5", byDc, 20, 40, 20))
+    val se1 = intercept[IllegalArgumentException](
+      byDc("sum_over_time(req[20ms]) unless 5"))
     assert(se1.getMessage.contains("not scalars"), se1.getMessage)
     val se2 = intercept[IllegalArgumentException](e.queryRange(
       "count_over_time(req[20ms]) and 2", 20, 40, 20))
@@ -1323,42 +1319,40 @@ class EngineSpec extends AnyFunSuite {
 
   test("finer-grouped subquery inner pools into the evaluation groups") {
     val e = groupedEngine()
-    val g = Expr.Grouping(by = true, List("service"))
+    // the evaluation grouping is the root's: `sum by (service) (...)`
+    def byService(inner: String) =
+      e.queryRange(s"sum by (service) ($inner)", 40, 40, 40).df
+        .collect().toSet[Row].map(r => (r.getString(0), r.getDouble(2)))
     // inner per (service, dc) on the 20ms grid (anchored at 0): at 20
     // web/a {1,2}→3, web/b→4, mob/a→8, mob/b→16; at 40 cli→32. The
     // outer max pools each service's dc sub-series over (0, 40]:
     // web max(3,4)=4, mob max(8,16)=16, cli 32.
-    val out = e.queryRangeBy(
-      "max_over_time(sum by (service, dc) (req)[40ms:20ms])",
-      g, 40, 40, 40).collect().toSet[Row]
-      .map(r => (r.getString(0), r.getDouble(2)))
+    val out =
+      byService("max_over_time(sum by (service, dc) (req)[40ms:20ms])")
     assert(out == Set(("web", 4d), ("mob", 16d), ("cli", 32d)), out)
     // a COARSER inner (evaluation needs dc it can't produce) still
     // rejects loudly
-    val coarse = intercept[IllegalArgumentException](e.queryRangeBy(
-      "max_over_time(sum by (service) (req)[40ms:20ms])",
-      Expr.Grouping(by = true, List("service", "dc")), 40, 40, 40))
+    val coarse = intercept[IllegalArgumentException](e.queryRange(
+      "sum by (service, dc) " +
+        "(max_over_time(sum by (service) (req)[40ms:20ms]))", 40, 40, 40))
     assert(coarse.getMessage.contains("finer `by` superset"),
       coarse.getMessage)
     // a `without` inner re-opens the evaluation key from its canonical
     // group identity (round 15): `without ()` keeps {service, dc} —
     // the finer pooling rule through the canonical path, same answer
     // as the explicit by (service, dc) inner above
-    val woFiner = e.queryRangeBy(
-      "max_over_time(sum without () (req)[40ms:20ms])", g, 40, 40, 40)
-      .collect().toSet[Row].map(r => (r.getString(0), r.getDouble(2)))
+    val woFiner =
+      byService("max_over_time(sum without () (req)[40ms:20ms])")
     assert(woFiner == out, woFiner)
     // ... and `without (dc)` keeps {service}: the same-key case — dc
     // sub-series merge INSIDE the inner sum, so web pools 1+2+4=7
-    val woSame = e.queryRangeBy(
-      "max_over_time(sum without (dc) (req)[40ms:20ms])", g, 40, 40, 40)
-      .collect().toSet[Row].map(r => (r.getString(0), r.getDouble(2)))
+    val woSame =
+      byService("max_over_time(sum without (dc) (req)[40ms:20ms])")
     assert(woSame == Set(("web", 7d), ("mob", 24d), ("cli", 32d)), woSame)
     // undefined ONLY when the inner removed an evaluation label — its
     // value is gone from the canonical identity
-    val rm = intercept[IllegalArgumentException](e.queryRangeBy(
-      "max_over_time(sum without (service) (req)[40ms:20ms])",
-      g, 40, 40, 40))
+    val rm = intercept[IllegalArgumentException](
+      byService("max_over_time(sum without (service) (req)[40ms:20ms])"))
     assert(rm.getMessage.contains("removed evaluation label"),
       rm.getMessage)
   }
@@ -1393,7 +1387,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("aggregate inners in sliding evaluation: windowed twin, pooled transforms") {
-    // round 13: Aggregate nodes admitted into slidingEval/queryRangeBy.
+    // round 13: Aggregate nodes admitted into sliding evaluation.
     // ints on ts {10,20,30,40} values {2,4,6,8}; step 20ms windows
     // (T-20, T] at T ∈ {20, 40} → sum(ints) = {2+4, 6+8} = {6, 14}.
     val e = helperEngine()
@@ -1419,29 +1413,22 @@ class EngineSpec extends AnyFunSuite {
     val sq = e.query("max_over_time(sum(ints)[40ms:20ms])", 0, 40)
       .df.orderBy("timestamp").collect().map(_.getDouble(1)).toSeq
     assert(sq == Seq(6.0, 14.0))
-    // grouped twin routes through queryRangeBy when groupings agree...
+    // queryRange resolves a grouped root's grouping from the tree: one
+    // series per group, keyed by the by-labels...
     val h = httpEngine()
-    val g = h.queryRangeBy(
-      "sum by (service) (http_requests_total)",
-      Expr.Grouping(by = true, List("service")), 29, 51, 22)
-      .orderBy("service", "timestamp").collect()
+    val root = h.queryRange("sum by (service) (http_requests_total)",
+      29, 51, 22)
+    assert(root.seriesKey == Seq("service") && !root.canonical)
+    val g = root.df.orderBy("service", "timestamp").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     // windows (7,29] and (29,51]: web 45+47 / 23+48, mobile 9+18 / 0+100
     assert(g.toSeq == Seq(("mobile", 29L, 27.0), ("mobile", 51L, 100.0),
       ("web", 29L, 92.0), ("web", 51L, 71.0)))
-    // ...and a MISMATCHED grouping rejects (one group key per sliding
-    // evaluation)
-    intercept[IllegalArgumentException](h.queryRangeBy(
-      "sum by (other) (http_requests_total)",
-      Expr.Grouping(by = true, List("service")), 29, 51, 22).collect())
-    // queryRange resolves a grouped root's grouping from the tree: the
-    // same series, keyed by the by-labels
-    val root = h.queryRange("sum by (service) (http_requests_total)",
-      29, 51, 22)
-    assert(root.seriesKey == Seq("service") && !root.canonical)
-    assert(root.df.orderBy("service", "timestamp").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
-      g.toSeq)
+    // ...and a MISMATCHED inner grouping rejects (one group key per
+    // sliding evaluation)
+    intercept[IllegalArgumentException](h.queryRange(
+      "sum by (service) (sum by (other) (http_requests_total))",
+      29, 51, 22).df.collect())
     // a grouped aggregate beside a groupless one still rejects: the
     // groupless root pools everything into one series
     intercept[IllegalArgumentException](h.queryRange(

@@ -181,27 +181,29 @@ class RangeFnSpec extends AnyFunSuite {
       ("m", Map("u" -> "b"), 5L, 100d))
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
-    val sums = e.rangeAggregateBy("sum_over_time(m[30ms])", "u", 0L, 100L)
+    val byU = Expr.Grouping(by = true, List("u"))
+    val sums = e.rangeAggregateBy("sum_over_time(m[30ms])", byU, 0L, 100L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(sums.toSet === Set(("a", 0L, 30.0), ("b", 0L, 100.0)))
     // pair kinds stay within the group: only a has two samples
-    val rates = e.rangeAggregateBy("rate(m[30ms])", "u", 0L, 100L)
+    val rates = e.rangeAggregateBy("rate(m[30ms])", byU, 0L, 100L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(rates.toSet === Set(("a", 0L, 1000.0))) // +10 over 10ms
     intercept[IllegalArgumentException] {
-      e.rangeAggregateBy("absent_over_time(m[30ms])", "u", 0L, 100L)
+      e.rangeAggregateBy("absent_over_time(m[30ms])", byU, 0L, 100L)
     }
     intercept[IllegalArgumentException] {
-      e.rangeAggregateBy("sum(m)", "u", 0L, 100L)
+      e.rangeAggregateBy("sum(m)", byU, 0L, 100L)
     }
     // grouped × sliding: per-group lookback windows at each step
-    val slid = e.queryRangeBy("sum_over_time(m[30ms])", "u", 0L, 30L, 10L)
+    val slid = e.queryRange("sum by (u) (sum_over_time(m[30ms]))",
+        0L, 30L, 10L).df
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(slid.toSet === Set(
       ("a", 10L, 10.0), ("a", 20L, 30.0), ("a", 30L, 30.0),
       ("b", 10L, 100.0), ("b", 20L, 100.0), ("b", 30L, 100.0)))
     intercept[IllegalArgumentException] {
-      e.queryRangeBy("absent_over_time(m[30ms])", "u", 0L, 30L, 10L)
+      e.queryRange("sum by (u) (absent_over_time(m[30ms]))", 0L, 30L, 10L)
     }
   }
 
@@ -263,8 +265,8 @@ class RangeFnSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(wo.toSet === Set(("u=a", 0L, 30d), ("u=b", 0L, 100d)))
     // multi-label sliding: per-(tuple, step) lookback windows
-    val slid = e.queryRangeBy("sum_over_time(m[30ms])",
-        Expr.Grouping(by = true, List("u", "dc")), 0L, 20L, 10L)
+    val slid = e.queryRange("sum by (u, dc) (sum_over_time(m[30ms]))",
+        0L, 20L, 10L).df
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(slid.toSet === Set(
@@ -274,7 +276,8 @@ class RangeFnSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](e.rangeAggregateBy(
       "sum_over_time(m[30ms])", Expr.Grouping(by = true, Nil), 0L, 100L))
     intercept[IllegalArgumentException](e.queryRangeBy(
-      "sum_over_time(m[30ms])", Expr.Grouping(by = true, Nil), 0L, 20L, 10L))
+      PromParser.parse("sum_over_time(m[30ms])"),
+      Expr.Grouping(by = true, Nil), 0L, 20L, 10L))
   }
 
   test("grouped methods honor @/offset like select() does") {
@@ -288,31 +291,35 @@ class RangeFnSpec extends AnyFunSuite {
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
     val g = e.rangeAggregateBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
-      "u", 0L, 100L).collect()
+      Expr.Grouping(by = true, List("u")), 0L, 100L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(g.toSet === Set(("a", 0L, 20.0))) // t=5 samples gone, b empty
-    val agg = e.aggregateBy("m @ 0 offset 10ms", Expr.AggSum, "u", 0L, 100L)
+    val agg = e.query("sum by (u) (m @ 0 offset 10ms)", 0L, 100L).df
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(agg.toSet === Set(("a", 20.0)))
-    val slid = e.queryRangeBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
-      "u", 0L, 30L, 10L).collect()
+    val slid = e.queryRange(
+      "sum by (u) (sum_over_time(m[30ms] @ 0 offset 10ms))",
+      0L, 30L, 10L).df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(slid.toSet === Set(
       ("a", 20L, 20.0), ("a", 30L, 20.0))) // only t=15 survives
   }
 
-  test("aggregateBy answers every aggregation but count_values") {
+  test("grouped stddev and count_values answer per group through query") {
     val rows = Seq(
       ("m", Map("u" -> "a"), 5L, 1d), ("m", Map("u" -> "a"), 15L, 5d),
       ("m", Map("u" -> "b"), 5L, 7d))
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
     // population stddev: a {1, 5} → 2, b {7} → 0
-    val sd = e.aggregateBy("m", Expr.AggStddev, "u", 0L, 100L)
+    val sd = e.query("stddev by (u) (m)", 0L, 100L).df
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(sd.toSet === Set(("a", 2.0), ("b", 0.0)))
-    intercept[IllegalArgumentException](
-      e.aggregateBy("m", Expr.AggCountValues("v"), "u", 0L, 100L))
+    // count_values keys the counts by (u, value text)
+    val cv = e.query("""count_values("v", m) by (u)""", 0L, 100L).df
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    assert(cv.toSet === Set(("a", "1.0", 1.0), ("a", "5.0", 1.0),
+      ("b", "7.0", 1.0)))
   }
 
   test("subquery: outer range fn over the inner sliding series") {
